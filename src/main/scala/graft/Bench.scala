@@ -32,101 +32,108 @@ object Bench {
     "events_sessionize_tumbling", "json_extract", "text_tokenize_tf",
     "exact_dedup", "similarity_topk", "asof_enrich")
 
+  /** Bench's differences from `GraftSession.builder`: the interactive
+    * small-data session the timed suite runs in. `main` applies them;
+    * SessionSpec runs the headline keys under the runtime-modifiable
+    * ones. The env knobs are the replica-tier A/B settings of BENCH_AB.md;
+    * the sf0.1 suite runs at their defaults. */
+  val sessionConf: Seq[(String, String)] = Seq(
+    // Bench-scale shuffles are a few MB: a handful of shuffle tasks beats
+    // one-per-core scheduling overhead. At 100 TB this knob is sized to
+    // data volume (SCALE.md), never to a constant. Round-12 re-measured
+    // 4 vs 8 vs 16 on the 32-cpu harness shape after the sized-bucket +
+    // merge-sort changes: 8 wins (1.66–1.85 s vs 1.90 s at 4 — the
+    // single-digit-MB window/dedup reduces still want a few-way spread
+    // once the scan stages stopped dominating task count).
+    "spark.sql.shuffle.partitions" ->
+      sys.env.getOrElse("SPARK_GRAFT_BENCH_SHUFFLE", "8"),
+    // df.count() re-optimizes per action; constraint propagation is the
+    // costliest optimizer phase on these multi-join plans and derives
+    // nothing the explicit filters don't already state.
+    "spark.sql.constraintPropagation.enabled" -> "false",
+    // CBO OFF for the bench (round-10): none of the 20 headline keys
+    // reads an ANALYZEd table, so BasicStatsPlanVisitor costing is pure
+    // per-action planning overhead on a suite whose cost is dominated by
+    // planning constants (FLOOR_EVIDENCE.md §1 — once-planned execution
+    // is 20–30 ms/key). Verify/production sessions keep CBO on.
+    "spark.sql.cbo.enabled" -> "false",
+    "spark.sql.cbo.joinReorder.enabled" -> "false",
+    // AQE is essential at cluster scale but pure re-planning overhead on
+    // sub-second local queries; the bench mirrors an interactive
+    // small-data config. Verify/production keep it on. The env knob
+    // (round-8) turns it on for the sf1/sf10 A/B tiers, where
+    // multi-second joins benefit from runtime broadcast conversion —
+    // same sized-to-data-volume doctrine as SHUFFLE/SPLIT.
+    "spark.sql.adaptive.enabled" ->
+      sys.env.getOrElse("SPARK_GRAFT_BENCH_AQE", "false"),
+    // The sf0.1 tables are single ~2-15 MB files; 2 MB splits give the
+    // cached tables ~8 partitions so per-partition aggregation actually
+    // parallelizes (a 15 MB lineitem at the 128 MB default is ONE task).
+    "spark.sql.files.maxPartitionBytes" ->
+      sys.env.getOrElse("SPARK_GRAFT_BENCH_SPLIT", "2097152"),
+    // Kilobyte shuffle blocks: lz4 framing costs more than it saves.
+    "spark.shuffle.compress" ->
+      sys.env.getOrElse("SPARK_GRAFT_BENCH_COMPRESS", "false"),
+    "spark.broadcast.compress" ->
+      sys.env.getOrElse("SPARK_GRAFT_BENCH_COMPRESS", "false"),
+    // The 10 MB Spark default, pinned explicitly so the bench is immune
+    // to ambient config: dims broadcast, orders ⋈ lineitem stays SMJ.
+    // Measured (r3): raising to 100 MB to broadcast orders is NOT a win
+    // — the per-run broadcast build costs more than the exchanges saved
+    // (2.58 s vs 2.49 s total). At 100 TB the threshold + AQE decide
+    // per stats.
+    "spark.sql.autoBroadcastJoinThreshold" -> "10485760",
+    // The pinned source cache is re-scanned 60+ times; dictionary/RLE
+    // decompression of the columnar batches on every scan costs more
+    // than the memory it saves at this corpus size (the whole corpus is
+    // ~60 MB uncompressed on a 128 GiB heap). DuckDB's buffer pool is
+    // likewise uncompressed at this scale.
+    "spark.sql.inMemoryColumnarStorage.compression" -> "false",
+    // Static conf, effective because this is the JVM's first session:
+    // the suite's ~20 queries × several codegen units per query exceed
+    // the 100-entry default Janino class cache, so fresh per-run counts
+    // would re-COMPILE evicted units (tens of ms each) instead of
+    // hitting the cache. Sized to hold the whole suite with headroom.
+    "spark.sql.codegen.cache.maxEntries" -> "4096",
+    // The cache-priming count() in `main` is a bare scan, which the
+    // planner's DisableUnnecessaryBucketedScan would read UNbucketed —
+    // baking a partition-less plan into the InMemoryRelation and
+    // forfeiting the co-located joins every later query would get. Force
+    // bucketed reads so the cache carries HashPartitioning(orderkey, 32).
+    "spark.sql.sources.bucketing.autoBucketedScan.enabled" -> "false")
+
+  /** The bench session: `GraftSession.local` plus [[sessionConf]]. */
+  def session(): SparkSession =
+    GraftSession.local().config(sessionConf.toMap).getOrCreate()
+
+  /** Locale.ROOT: a comma-decimal default locale must not corrupt the
+    * machine-parsed stdout. */
+  private def ms(v: Double): String =
+    String.format(java.util.Locale.ROOT, "%.1f", v)
+
+  /** The same-boot floor sample line printed above the JSON line. */
+  def floorLine(jb: Double, jm: Double, sb: Double, sm: Double): String =
+    s"[floor] job_best_ms=${ms(jb)} job_med_ms=${ms(jm)} " +
+      s"sql_best_ms=${ms(sb)} sql_med_ms=${ms(sm)}"
+
+  /** The one machine-parsed stdout JSON line. "floor" is ADDITIVE: the
+    * other fields keep their meaning; carrying the same-boot floor sample
+    * INSIDE the archived JSON makes the code-vs-boot split of any total a
+    * one-lookup check instead of a cross-file hunt. Query times use
+    * Double.toString, which is locale-independent. */
+  def jsonLine(results: Seq[(String, Double)], jb: Double, jm: Double,
+      sb: Double, sm: Double, sfDir: String): String = {
+    val qs = results.map { case (k, v) => "\"" + k + "\":" + v }
+      .mkString("{", ",", "}")
+    val total = results.map(_._2).filter(_ >= 0).sum
+    val floorJson = s"""{"job_best_ms":${ms(jb)},"job_med_ms":${ms(jm)},""" +
+      s""""sql_best_ms":${ms(sb)},"sql_med_ms":${ms(sm)}}"""
+    s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"floor":$floorJson,"sf":"$sfDir"}"""
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .withExtensions(graft.plans.GraftExtensions)
-      // Bench-scale shuffles are a few MB: a handful of shuffle tasks beats
-      // one-per-core scheduling overhead. At 100 TB this knob is sized to
-      // data volume (SCALE.md), never to a constant. Round-12 re-measured
-      // 4 vs 8 vs 16 on the 32-cpu harness shape after the sized-bucket +
-      // merge-sort changes: 8 wins (1.66–1.85 s vs 1.90 s at 4 — the
-      // single-digit-MB window/dedup reduces still want a few-way spread
-      // once the scan stages stopped dominating task count).
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_BENCH_SHUFFLE", "8"))
-      // df.count() re-optimizes per action; constraint propagation is the
-      // costliest optimizer phase on these multi-join plans and derives
-      // nothing the explicit filters don't already state.
-      .config("spark.sql.constraintPropagation.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // CBO OFF for the bench (round-10): none of the 20 headline keys
-      // reads an ANALYZEd table, so BasicStatsPlanVisitor costing is pure
-      // per-action planning overhead on a suite whose cost is dominated by
-      // planning constants (FLOOR_EVIDENCE.md §1 — once-planned execution
-      // is 20–30 ms/key). Verify/production sessions keep CBO on.
-      .config("spark.sql.cbo.enabled",
-        sys.env.getOrElse("SPARK_GRAFT_BENCH_CBO", "false"))
-      .config("spark.sql.cbo.joinReorder.enabled",
-        sys.env.getOrElse("SPARK_GRAFT_BENCH_CBO", "false"))
-      // AQE is essential at cluster scale but pure re-planning overhead on
-      // sub-second local queries; the bench mirrors an interactive
-      // small-data config. Verify/production keep it on. The env knob
-      // (round-8) turns it on for the sf1/sf10 A/B tiers, where
-      // multi-second joins benefit from runtime broadcast conversion —
-      // same sized-to-data-volume doctrine as SHUFFLE/SPLIT above.
-      .config("spark.sql.adaptive.enabled",
-        sys.env.getOrElse("SPARK_GRAFT_BENCH_AQE", "false"))
-      // The sf0.1 tables are single ~2-15 MB files; 2 MB splits give the
-      // cached tables ~8 partitions so per-partition aggregation actually
-      // parallelizes (a 15 MB lineitem at the 128 MB default is ONE task).
-      .config("spark.sql.files.maxPartitionBytes",
-        sys.env.getOrElse("SPARK_GRAFT_BENCH_SPLIT", "2097152"))
-      // Kilobyte shuffle blocks: lz4 framing costs more than it saves.
-      .config("spark.shuffle.compress",
-        sys.env.getOrElse("SPARK_GRAFT_BENCH_COMPRESS", "false"))
-      .config("spark.broadcast.compress",
-        sys.env.getOrElse("SPARK_GRAFT_BENCH_COMPRESS", "false"))
-      // The 10 MB Spark default, pinned explicitly so the bench is immune
-      // to ambient config: dims broadcast, orders ⋈ lineitem stays SMJ.
-      // Measured (r3): raising to 100 MB to broadcast orders is NOT a win
-      // — the per-run broadcast build costs more than the exchanges saved
-      // (2.58 s vs 2.49 s total). At 100 TB the threshold + AQE decide
-      // per stats.
-      .config("spark.sql.autoBroadcastJoinThreshold",
-        sys.env.getOrElse("SPARK_GRAFT_BENCH_BROADCAST", "10485760"))
-      // Runtime Bloom-filter injection thresholds (round-13, the sf100
-      // q5/q3 inversion): at 600 M lineitem the date+region-filtered
-      // orders side keeps ~3% of orderkeys, and a bloom built from it
-      // cuts the fact shuffle 600 M → ~20 M rows — but Spark's default
-      // creationSideThreshold (10 MB plan-stats estimate) refuses any
-      // creation side bigger than a broadcast, so the filter never
-      // injects at replica tiers. Raised only when the env sets it; the
-      // sf0.1 driver bench keeps Spark defaults.
-      .config("spark.sql.optimizer.runtime.bloomFilter.creationSideThreshold",
-        sys.env.getOrElse("SPARK_GRAFT_BENCH_BLOOM_CREATION", "10MB"))
-      .config(
-        "spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold",
-        sys.env.getOrElse("SPARK_GRAFT_BENCH_BLOOM_APPLY", "10GB"))
-      // The pinned source cache is re-scanned 60+ times; dictionary/RLE
-      // decompression of the columnar batches on every scan costs more
-      // than the memory it saves at this corpus size (the whole corpus is
-      // ~60 MB uncompressed on a 128 GiB heap). DuckDB's buffer pool is
-      // likewise uncompressed at this scale.
-      .config("spark.sql.inMemoryColumnarStorage.compression",
-        sys.env.getOrElse("SPARK_GRAFT_BENCH_CACHE_COMPRESS", "false"))
-      // Static conf, effective because this is the JVM's first session:
-      // the suite's ~20 queries × several codegen units per query exceed
-      // the 100-entry default Janino class cache, so fresh per-run counts
-      // would re-COMPILE evicted units (tens of ms each) instead of
-      // hitting the cache. Sized to hold the whole suite with headroom.
-      .config("spark.sql.codegen.cache.maxEntries",
-        sys.env.getOrElse("SPARK_GRAFT_BENCH_CODEGEN_CACHE", "4096"))
-      // Bucketed-layout co-location (round-10, see GraftSession.builder):
-      // subset co-partitioning + trustworthy per-bucket sort metadata
-      // (Tables.materializeBuckets writes one file per bucket).
-      .config("spark.sql.requireAllClusterKeysForCoPartition", "false")
-      .config("spark.sql.legacy.bucketedTableScan.outputOrdering", "true")
-      // The cache-priming count() below is a bare scan, which the planner's
-      // DisableUnnecessaryBucketedScan would read UNbucketed — baking a
-      // partition-less plan into the InMemoryRelation and forfeiting the
-      // co-located joins every later query would get. Force bucketed reads
-      // so the cache carries HashPartitioning(orderkey, 32).
-      .config("spark.sql.sources.bucketing.autoBucketedScan.enabled", "false")
-      .getOrCreate()
+    val spark = session()
     spark.sparkContext.setLogLevel("WARN")
 
     // Ingest-time prep, OUTSIDE all timing (the same class as the cache
@@ -222,19 +229,8 @@ object Bench {
       spark.range(600000).agg(org.apache.spark.sql.functions.sum(
         org.apache.spark.sql.functions.col("id"))).collect(): Unit
     }
-    println(f"[floor] job_best_ms=$jb%.1f job_med_ms=$jm%.1f " +
-      f"sql_best_ms=$sb%.1f sql_med_ms=$sm%.1f")
-    val qs = results.map { case (k, v) => "\"" + k + "\":" + v }
-      .mkString("{", ",", "}")
-    val total = results.map(_._2).filter(_ >= 0).sum
-    // "floor" is ADDITIVE (round-18, VERDICT r17 item 3): the driver
-    // parses the pre-existing fields; carrying the same-boot floor
-    // sample INSIDE the archived JSON makes the code-vs-boot split of
-    // any total a one-lookup check instead of a cross-file hunt. The
-    // timed region and the suite methodology are unchanged.
-    val floorJson = f"""{"job_best_ms":$jb%.1f,"job_med_ms":$jm%.1f,""" +
-      f""""sql_best_ms":$sb%.1f,"sql_med_ms":$sm%.1f}"""
-    println(s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"floor":$floorJson,"sf":"$sfDir"}""")
+    println(floorLine(jb, jm, sb, sm))
+    println(jsonLine(results, jb, jm, sb, sm, sfDir))
     System.out.flush()
     spark.stop()
   }

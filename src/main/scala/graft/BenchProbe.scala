@@ -1,32 +1,14 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Scratch decomposition of per-query bench cost (not part of the driver
-  * contract; used to attack the bench gate round by round). */
+  * contract; used to attack the bench gate round by round). Runs in
+  * Bench's own session. */
 object BenchProbe {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .withExtensions(graft.plans.GraftExtensions)
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.adaptive.enabled", "false")
-      .config("spark.sql.constraintPropagation.enabled", "false")
-      .config("spark.sql.files.maxPartitionBytes", "2097152")
-      .config("spark.shuffle.compress", "false")
-      .config("spark.broadcast.compress", "false")
-      .config("spark.sql.autoBroadcastJoinThreshold", "10485760")
-      .config("spark.sql.inMemoryColumnarStorage.compression", "false")
-      .config("spark.sql.requireAllClusterKeysForCoPartition", "false")
-      .config("spark.sql.legacy.bucketedTableScan.outputOrdering", "true")
-      .config("spark.local.dir",
-        sys.env.getOrElse("SPARK_GRAFT_BENCH_LOCALDIR", "/tmp"))
-      .getOrCreate()
+    val spark = Bench.session()
     spark.sparkContext.setLogLevel("WARN")
     // The kernels mode never touches the bench tables — skip the pin.
     if (!args.contains("kernels"))
@@ -238,12 +220,7 @@ object BenchProbe {
 object MinhashProbe {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = org.apache.spark.sql.SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val spark = GraftSession.local(32).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     import org.apache.spark.sql.functions._
     graft.operators.VectorOps.registerFns(spark)

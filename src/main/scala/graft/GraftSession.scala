@@ -4,13 +4,24 @@ import org.apache.spark.sql.SparkSession
 
 /** Library entry points for users of the engine (SURVEY §3).
   *
-  * `GraftSession.builder()` is the recommended way to build a session: it
-  * wires GraftExtensions (cosine_sim / dot_product / rule seam) and the
-  * engine's baseline configs. `Views.register` exposes the corpus tables
-  * as temp views so every operator is reachable from SQL text
-  * (`spark.sql(...)`) as well as the DataFrame API.
+  * `GraftSession.builder()` is the only way the engine builds a session:
+  * it wires GraftExtensions (cosine_sim / dot_product / rule seam) and the
+  * engine's baseline configs. Every main, probe and the test session starts
+  * from it and adds only its own differences as visible `.config` lines.
+  * `Views.register` exposes the corpus tables as temp views so every
+  * operator is reachable from SQL text (`spark.sql(...)`) as well as the
+  * DataFrame API.
   */
 object GraftSession {
+  /** Core count of the local mains: `SPARK_GRAFT_CPUS`, default 4. */
+  lazy val cpus: Int = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt
+
+  /** `builder` on `local[cpus]` with the web UI off: the start of every
+    * main and probe. */
+  def local(shufflePartitions: Int = cpus): SparkSession.Builder =
+    builder(s"local[$cpus]", shufflePartitions)
+      .config("spark.ui.enabled", "false")
+
   def builder(master: String = "local[*]",
       shufflePartitions: Int = Runtime.getRuntime.availableProcessors)
       : SparkSession.Builder =

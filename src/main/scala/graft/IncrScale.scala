@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import graft.operators.VectorOps
 
@@ -18,14 +17,7 @@ object IncrScale {
   def main(args: Array[String]): Unit = {
     require(args.length >= 2, "usage: IncrScale <sfDir> <indexDir>")
     val (sfDir, indexDir) = (args(0), args(1))
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .withExtensions(graft.plans.GraftExtensions)
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.local(32).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
     def timed[T](label: String)(f: => T): T = {

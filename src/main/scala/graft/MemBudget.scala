@@ -34,6 +34,13 @@ object MemBudget {
   private def confOpt(s: SparkSession, key: String): Option[String] =
     Option(s.conf.get(key, null))
 
+  private val InDriver = """local(\[(\d+|\*)(\s*,\s*\d+)?\])?""".r
+
+  /** Does `master` run its tasks inside the driver JVM? `local`,
+    * `local[n]`, `local[*]` (and their `[n, maxFailures]` forms) do;
+    * `local-cluster[...]` starts separate executor JVMs. */
+  def inDriverMaster(master: String): Boolean = InDriver.matches(master)
+
   /** The session's execution-memory-per-concurrent-task estimate, in
     * bytes. Local masters: driver heap ÷ scheduler slots (local[n] runs
     * n concurrent tasks inside the driver JVM). Cluster masters:
@@ -44,7 +51,7 @@ object MemBudget {
     confOpt(s, "spark.graft.test.memPerCoreBytes").map(_.toLong)
       .getOrElse {
         val conf = s.sparkContext.getConf
-        if (conf.get("spark.master", "local[*]").startsWith("local"))
+        if (inDriverMaster(conf.get("spark.master", "local[*]")))
           Runtime.getRuntime.maxMemory /
             math.max(1, s.sparkContext.defaultParallelism)
         else

@@ -1,8 +1,7 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
-/** Plan-hygiene sweep over every declared query.
+/** Plan-hygiene sweep over every declared query, planned in Verify's
+  * session (the plans the correctness check runs).
   *
   * Notes on what is NOT flagged:
   *  - the final global sort every query carries is the oracle-determinism
@@ -67,11 +66,7 @@ object PlanAudit {
     "corpus_dsir_weights")   // 1-row corpus-totals broadcast into ratio
 
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[4]")
-      .withExtensions(graft.plans.GraftExtensions)
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val spark = Verify.session()
     spark.sparkContext.setLogLevel("ERROR")
     val dir = "/root/testdata/sf0.001"
     var flagged = 0

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Scale-proof data generator: replicates an SF directory `factor` times
@@ -64,15 +64,12 @@ object ScaleGen {
     // keys were the failure mode this replaces with a loud error.
     require(factor >= 1 && factor * IntShift <= Int.MaxValue - IntShift,
       s"factor too large for int32 key shifts, got $factor")
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
+    val spark = GraftSession.local(32)
       .appName("graft-scalegen")
-      .config("spark.sql.shuffle.partitions", "32")
       // Write TimestampType as INT64 timestamp[us] (not INT96): matches
       // the driver-generated layout, so the replica round-trips through
       // both Tables.loadEvents' native path and the DuckDB oracle.
       .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
-      .config("spark.ui.enabled", "false")
       .getOrCreate()
     try {
       keyCols.foreach { case (table, keys) =>

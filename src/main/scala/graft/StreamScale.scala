@@ -19,15 +19,7 @@ object StreamScale {
   def main(args: Array[String]): Unit = {
     val sfDir = args(0)
     val nFiles = if (args.length > 1) args(1).toInt else 20
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-stream-scale")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
+    val spark = GraftSession.local().appName("graft-stream-scale")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     try {

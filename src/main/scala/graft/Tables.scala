@@ -546,12 +546,8 @@ object Tables {
 object LayoutBuild {
   def main(args: Array[String]): Unit = {
     require(args.nonEmpty, "usage: LayoutBuild <sfDir> [sfDir...]")
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
+    val spark = GraftSession.local(32)
       .config("spark.sql.warehouse.dir", "/tmp/graft_layout_build_wh")
-      .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     val fam = args.collectFirst {

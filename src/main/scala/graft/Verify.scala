@@ -4,6 +4,16 @@ import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
+  /** The correctness session: production `GraftSession.local` plus one
+    * difference. The sf dirs are single-file tables; 8 MB splits restore
+    * scan parallelism for per-row HOF-heavy operators (simhash/rolling-hash
+    * folds ran on ONE task otherwise). At cluster scale inputs are many
+    * files and the 128 MB default is right. PlanAudit and Explain inspect
+    * plans of this same session. */
+  def session(): SparkSession = GraftSession.local()
+    .config("spark.sql.files.maxPartitionBytes", "8388608")
+    .getOrCreate()
+
   def main(args: Array[String]): Unit = {
     // Usage: Verify <sfDir> <outDir> [queryName...] — trailing names
     // restrict the dump for fast local iteration; the driver passes two
@@ -11,26 +21,7 @@ object Verify {
     require(args.length >= 2, "usage: Verify <sfDir> <outDir> [query...]")
     val (sfDir, outDir) = (args(0), args(1))
     val only = args.drop(2).toSet
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .withExtensions(graft.plans.GraftExtensions)
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // CBO from session start — see GraftSession.builder (order-
-      // independence; only ANALYZEd graft_cbo_* tables carry stats).
-      .config("spark.sql.cbo.enabled", "true")
-      .config("spark.sql.cbo.joinReorder.enabled", "true")
-      // The sf dirs are single-file tables; 8 MB splits restore scan
-      // parallelism for per-row HOF-heavy operators (simhash/rolling-hash
-      // folds ran on ONE task otherwise). At cluster scale inputs are
-      // many files and the 128 MB default is right.
-      .config("spark.sql.files.maxPartitionBytes", "8388608")
-      // Bucketed-layout co-location (round-10, see GraftSession.builder).
-      .config("spark.sql.requireAllClusterKeysForCoPartition", "false")
-      .config("spark.sql.legacy.bucketedTableScan.outputOrdering", "true")
-      .getOrCreate()
+    val spark = session()
     spark.sparkContext.setLogLevel("WARN")
     // Layout contract (round-6 post-mortem): the loader's ts-unit handling
     // must land events inside the corpus's documented era. A testdata

@@ -1268,8 +1268,17 @@ object AnnOps {
       curRows += p
     }
     val chunks = packed.filter(_.nonEmpty).map(_.toSeq).toSeq
+    val nLists = model.centroids.size
+    // The index pruned to a set of queries' probed lists: the rerank
+    // source the shuffled rerank requires (see `rerankShuffle`).
+    def probedIndex(c: Seq[(Long, Seq[Int], Long)]): DataFrame = {
+      val lists = c.flatMap(_._2).distinct
+      if (lists.size < nLists) index.filter(col("list_id").isin(lists: _*))
+      else index
+    }
     if (chunks.size <= 1)
-      ivfPqKnnBatch(s, emb, index, model, q, k, nProbe, nCandidates,
+      ivfPqKnnBatch(s, emb, probedIndex(chunks.flatten), model, q, k,
+        nProbe, nCandidates,
         knownQueryRows = qProbes.length.toLong, sizesHint = sizes,
         rerankInt8 = rerankInt8, rerankBudgetBytes = budgetBytes,
         poolHint = pool,
@@ -1282,7 +1291,6 @@ object AnnOps {
       // One eager materialization of the deduped query frame: 334 chunks
       // must not re-run the query source scan + dedup 334 times.
       val qc = q.localCheckpoint(true)
-      val nLists = model.centroids.size
       // (Round-17 note: a persisted shared rerank source handed to every
       // chunk was tried here and REMOVED — see the measurement note in
       // ivfPqKnnBatch's rerank-source resolution. Round-18 note: a
@@ -1308,11 +1316,7 @@ object AnnOps {
           if (ids.size <= 8192) qc.filter(col("query_id").isin(ids: _*))
           else qc.join(broadcast(ids.toDF("query_id")),
             Seq("query_id"), "left_semi")
-        val chunkLists = c.flatMap(_._2).distinct
-        val chunkIdx =
-          if (chunkLists.size < nLists)
-            index.filter(col("list_id").isin(chunkLists: _*))
-          else index
+        val chunkIdx = probedIndex(c)
         // The eager localCheckpoint materializes chunk i fully (k rows
         // per query) before chunk i+1 constructs — in-flight state is
         // one chunk's, never the batch's.
@@ -1325,7 +1329,8 @@ object AnnOps {
           .localCheckpoint(true)
         if (sys.env.contains("GRAFT_ANN_DEBUG"))
           System.err.println(f"[ann-chunk] chunk=$i queries=${ids.size} " +
-            f"lists=${chunkLists.size} pools=${c.map(_._3).sum} " +
+            f"lists=${c.flatMap(_._2).distinct.size} " +
+            f"pools=${c.map(_._3).sum} " +
             f"serve=${(System.nanoTime() - t0) / 1e9}%.1fs")
         out
       }

@@ -3,7 +3,7 @@ package graft.operators
 import graft.{Q, Views}
 
 /** Recursive-CTE surface, wave 27 (round 6): Spark 4.1 ships
-  * `WITH RECURSIVE` (probed this session — see graft.Probe), which
+  * `WITH RECURSIVE` (pinned by RecursiveSpec), which
   * unlocks the hierarchy-query family SQL engines are expected to serve:
   * level-by-level tree walks and subtree rollups. The hierarchy is the
   * implicit binary tree over customer keys (parent = key DIV 2) — a

@@ -12,9 +12,9 @@ import graft.functions.CosineSimilarity
 
 /** SURVEY §4.3: the SparkSessionExtensions seam.
   *
-  * Usage: `SparkSession.builder().withExtensions(GraftExtensions).…`
-  * (Verify/Bench/tests all do). Injection points intentionally live here
-  * rather than ad hoc at call sites.
+  * Wired by `graft.GraftSession.builder`, which every session of the
+  * engine (mains, probes, tests) starts from. Injection points
+  * intentionally live here rather than ad hoc at call sites.
   */
 object GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {

@@ -1,6 +1,5 @@
 package graft.scale
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import graft.Tables
 
@@ -13,14 +12,11 @@ import graft.Tables
 object BucketProbe {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/tmp/sfx100")
-    val spark = SparkSession.builder().master("local[32]")
-      .withExtensions(graft.plans.GraftExtensions)
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
+    val spark = graft.GraftSession.local(32)
       .config("spark.sql.adaptive.enabled", "false")
       .config("spark.sql.warehouse.dir", "/tmp/graft_bucket_probe_wh")
       .config("spark.sql.files.maxPartitionBytes", "33554432")
-      .config("spark.ui.enabled", "false").getOrCreate()
+      .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     def t(n: String) = Tables.load(spark, sfDir, n)
 

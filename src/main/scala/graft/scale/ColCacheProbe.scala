@@ -1,6 +1,5 @@
 package graft.scale
 
-import org.apache.spark.sql.SparkSession
 
 /** Scan-side lever measurement for the sf100 A/B's three `weak` keys
   * (round 14, VERDICT r13 item 5): rollup_agg / exact_dedup /
@@ -22,18 +21,13 @@ object ColCacheProbe {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/tmp/sfx1000")
     val budgetMb = args.lift(1).map(_.toLong).getOrElse(16384L)
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .withExtensions(graft.plans.GraftExtensions)
-      .config("spark.sql.shuffle.partitions", "64")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
+    val spark = graft.GraftSession.local(64)
       // Cached-batch compression is itself a measured variable at this
       // tier (dict/RLE-encoded batches scan fewer bytes; uncompressed
       // ones skip per-scan decode) — default false, flip via env.
       .config("spark.sql.inMemoryColumnarStorage.compression",
         sys.env.getOrElse("SPARK_GRAFT_PROBE_COMPRESS", "false"))
-      .config("spark.ui.enabled", "false").getOrCreate()
+      .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
     def bestOf3(name: String): Double = {

@@ -1,6 +1,5 @@
 package graft.scale
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** exact_dedup cost decomposition at the replica tier (round 14): the key
@@ -19,13 +18,7 @@ object DedupFloorProbe {
   private val Flags = Set("unique", "declared-only")
   def main(args: Array[String]): Unit = {
     val sfDir = args.filterNot(Flags).headOption.getOrElse("/tmp/sfx1000")
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .withExtensions(graft.plans.GraftExtensions)
-      .config("spark.sql.shuffle.partitions", "64")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val spark = graft.GraftSession.local(64).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     // `unique` arg (round-17): the sfx replicas are CLONE-HEAVY by
     // construction (~1000 copies/text), where the partial aggregate

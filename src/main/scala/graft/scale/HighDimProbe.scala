@@ -36,13 +36,7 @@ object HighDimProbe {
   }
 
   private def session(): SparkSession = {
-    val s = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .withExtensions(graft.plans.GraftExtensions)
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val s = graft.GraftSession.local(32).getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     s
   }

@@ -1,6 +1,5 @@
 package graft.scale
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** 1 M-binary decode/phash tier rung with planted poison (round 15,
@@ -15,12 +14,7 @@ object MultimodalScaleProbe {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/tmp/sfx1000")
     val nRows = args.drop(1).headOption.map(_.toLong).getOrElse(1000000L)
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .withExtensions(graft.plans.GraftExtensions)
-      .config("spark.sql.shuffle.partitions", "64")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val spark = graft.GraftSession.local(64).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     import spark.implicits._
     import graft.operators.DocAssembly

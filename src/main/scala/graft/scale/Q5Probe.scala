@@ -1,6 +1,5 @@
 package graft.scale
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import graft.Tables
 
@@ -11,17 +10,11 @@ import graft.Tables
 object Q5Probe {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/tmp/sfx100")
-    val spark = SparkSession.builder().master("local[32]")
-      .withExtensions(graft.plans.GraftExtensions)
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
+    val spark = graft.GraftSession.local(32)
       .config("spark.sql.files.maxPartitionBytes", "33554432")
-      .config("spark.sql.requireAllClusterKeysForCoPartition", "false")
-      .config("spark.sql.legacy.bucketedTableScan.outputOrdering", "true")
       .config("spark.sql.sources.bucketing.autoBucketedScan.enabled", "false")
       .config("spark.sql.inMemoryColumnarStorage.compression", "false")
-      .config("spark.ui.enabled", "false").getOrCreate()
+      .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     // Input caching mirrors the sfx100 bench session; at sfx1000 the
     // inputs exceed the heap — SPARK_GRAFT_PROBE_CACHE=false runs the

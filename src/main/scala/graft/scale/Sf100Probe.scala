@@ -1,6 +1,5 @@
 package graft.scale
 
-import org.apache.spark.sql.SparkSession
 
 /** sf100-equivalent probe (round-10, VERDICT r9 item 6): the headline
   * joins one decade past the sf10 A/B tier — 600 M lineitem / 150 M
@@ -17,14 +16,7 @@ object Sf100Probe {
     val keys = if (args.length > 1) args.drop(1).toSeq
       else Seq("q1_pricing_summary", "q3_shipping_priority",
         "q5_local_supplier", "asof_enrich", "similarity_topk")
-    val spark = SparkSession.builder().master("local[32]")
-      .withExtensions(graft.plans.GraftExtensions)
-      .config("spark.sql.shuffle.partitions", "64")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.requireAllClusterKeysForCoPartition", "false")
-      .config("spark.sql.legacy.bucketedTableScan.outputOrdering", "true")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val spark = graft.GraftSession.local(64).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     keys.foreach { key =>
       val t0 = System.nanoTime()

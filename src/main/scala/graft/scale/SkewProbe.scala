@@ -1,6 +1,6 @@
 package graft.scale
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Measured AQE-skew-split vs manual-salting crossover (VERDICT r6
@@ -20,13 +20,8 @@ object SkewProbe {
   def main(args: Array[String]): Unit = {
     val sizes = (if (args.nonEmpty) args.toSeq else Seq("4", "16"))
       .map(_.toInt)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
+    val spark = graft.GraftSession.local(32)
       .appName("graft-skew-probe")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
       // Shuffle-join only: broadcast would dodge the skew machinery.
       .config("spark.sql.autoBroadcastJoinThreshold", "-1")
       .config("spark.sql.adaptive.autoBroadcastJoinThreshold", "-1")

@@ -1,6 +1,6 @@
 package graft.scale
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.Tables
 import graft.sources.TxLog
@@ -23,11 +23,7 @@ import graft.streaming.Streams
 object SoakProbe {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/tmp/sfx100")
-    val spark = SparkSession.builder().master("local[32]")
-      .withExtensions(graft.plans.GraftExtensions)
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val spark = graft.GraftSession.local(32).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     import spark.implicits._
 

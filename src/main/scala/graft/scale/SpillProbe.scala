@@ -2,7 +2,6 @@ package graft.scale
 
 import java.util.concurrent.atomic.AtomicLong
 import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
-import org.apache.spark.sql.SparkSession
 
 /** Constrained-memory spill certification (round-16, VERDICT r15 item 3):
   * every prior rung ran with a ~53 GiB block manager, so the sort/agg/
@@ -27,13 +26,8 @@ object SpillProbe {
     val sfDir = args.headOption.getOrElse("/tmp/sfx100")
     val keys = if (args.length > 1) args.drop(1).toSeq
       else graft.Bench.headline
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .withExtensions(graft.plans.GraftExtensions)
-      .config("spark.sql.shuffle.partitions", "64")
+    val spark = graft.GraftSession.local(64)
       .config("spark.sql.files.maxPartitionBytes", "67108864")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
       .config("spark.memory.fraction",
         sys.env.getOrElse("SPARK_GRAFT_MEMFRAC", "0.6"))
       // Round-18 A/B knob (VERDICT r17 item 4): ObjectHashAggregate
@@ -43,7 +37,7 @@ object SpillProbe {
       // immediately, paying the hash path's setup and using none of it.
       .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold",
         sys.env.getOrElse("SPARK_GRAFT_OHA_FALLBACK", "128"))
-      .config("spark.ui.enabled", "false").getOrCreate()
+      .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     val memSpill = new AtomicLong; val diskSpill = new AtomicLong
     val peakExec = new AtomicLong

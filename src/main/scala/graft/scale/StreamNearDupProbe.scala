@@ -52,7 +52,7 @@ object StreamNearDupProbe {
       else Some(new Thread(() => {
         // The contention load: a shuffle-bearing full-corpus aggregate,
         // looped until the stream drains — the declared exact_dedup
-        // key's cost class, sharing the session's 32 cores.
+        // key's cost class, sharing the session's cores.
         try {
           while (!stop) {
             docs.groupBy(xxhash64(col("text"))).count().count()
@@ -95,13 +95,7 @@ object StreamNearDupProbe {
     val nBatches = args.drop(2).headOption.map(_.toInt).getOrElse(10)
     val mode = args.drop(3).headOption.getOrElse("solo")
     val mft = args.drop(4).headOption.map(_.toInt).getOrElse(4)
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .withExtensions(graft.plans.GraftExtensions)
-      .config("spark.sql.shuffle.partitions", "64")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val spark = graft.GraftSession.local(64).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
     val docs = graft.Tables.load(spark, sfDir, "documents")

@@ -1,6 +1,5 @@
 package graft.scale
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import graft.Tables
 import graft.sources.TxLog
@@ -11,12 +10,7 @@ import graft.sources.TxLog
 object TxLogProbe {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/tmp/sfx100")
-    val spark = SparkSession.builder().master("local[32]")
-      .withExtensions(graft.plans.GraftExtensions)
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val spark = graft.GraftSession.local(32).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     def time[T](label: String)(f: => T): T = {
       val t0 = System.nanoTime(); val r = f

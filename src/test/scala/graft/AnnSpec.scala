@@ -357,6 +357,36 @@ class AnnSpec extends SparkSpec {
       .collect().map(_.toSeq).toSeq
     assert(dedup == unchunked,
       "dup query_ids must dedup to one serve per id, chunked or not")
+    // One chunk over a payload-carrying index: the shuffled rerank must
+    // read the index pruned to the batch's probed lists (3 of 8 here),
+    // as every chunk of the multi-chunk arm does, and the rows must not
+    // change.
+    import org.apache.spark.sql.catalyst.expressions.{Alias,
+      AttributeReference, Expression, In, InSet}
+    import org.apache.spark.sql.catalyst.plans.logical.{Filter, Project}
+    val pf = AnnOps.annIndex(spark, emb, model, payload = "float")
+    val onePayload = AnnOps.ivfPqKnnBatchChunked(spark, emb, pf, model,
+      queries.filter($"query_id" === 0), k = 10, nProbe = 3)
+    val onePayloadRows = onePayload.collect().map(_.toSeq).toSeq
+    assert(onePayloadRows.nonEmpty &&
+      onePayloadRows == unchunked.filter(_.head == 0L),
+      "one-chunk payload serve must equal the unchunked serve")
+    def onListId(e: Expression) = e.references.exists(_.name == "list_id")
+    val rerankSources = onePayload.queryExecution.analyzed.collect {
+      case p: Project if p.projectList.exists {
+        case Alias(a: AttributeReference, "embedding") => a.name == "p_vec"
+        case _ => false
+      } => p
+    }
+    assert(rerankSources.nonEmpty && rerankSources.forall(_.exists {
+      case Filter(cond, _) => cond.exists {
+        case i: In => onListId(i.value)
+        case i: InSet => onListId(i.child)
+        case _ => false
+      }
+      case _ => false
+    }), "the one-chunk rerank source must be list_id-pruned:\n" +
+      onePayload.queryExecution.analyzed.toString.take(2000))
   }
 
   test("payload-carrying index serves its own rerank: float payload == " +

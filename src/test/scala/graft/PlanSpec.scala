@@ -251,7 +251,9 @@ class PlanSpec extends SparkSpec {
       assert(pc.contains("topk_row_agg"),
         "capped budget must serve the bounded aggregate:\n" + pc.take(800))
       val cappedRows = capped.collect().toSeq
-      conf.unset("spark.graft.test.memPerCoreBytes")
+      // Pinned above the floor, not unset: the measured budget depends on
+      // the test JVM's heap and core count.
+      conf.set("spark.graft.test.memPerCoreBytes", (256L << 20).toString)
       val normal = SparkEntry.queries("window_rank_topn")(spark, sfDir)
       val pn = normal.queryExecution.executedPlan.toString
       assert(pn.contains("Window"),
@@ -259,6 +261,15 @@ class PlanSpec extends SparkSpec {
       assert(normal.collect().toSeq == cappedRows,
         "both plans must return identical rows")
     } finally conf.unset("spark.graft.test.memPerCoreBytes")
+  }
+
+  test("MemBudget: local masters are in-driver; local-cluster and cluster " +
+      "masters are not") {
+    Seq("local", "local[1]", "local[32]", "local[*]", "local[4,2]",
+        "local[*, 3]").foreach(m => assert(MemBudget.inDriverMaster(m), m))
+    Seq("local-cluster[2,1,1024]", "local[]", "local[x]", "locally",
+        "yarn", "spark://host:7077", "k8s://https://host:443").foreach(m =>
+      assert(!MemBudget.inDriverMaster(m), m))
   }
 
   test("runtime bloom filter prunes the fact side of a selective shuffle join") {

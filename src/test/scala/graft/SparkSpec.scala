@@ -4,29 +4,15 @@ import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Shared local session for all specs (one JVM-wide session keeps the suite
-  * fast; UTC + small shuffle partitions mirror the harness config). */
+  * fast): the production `GraftSession.builder` on local[4] with 4 shuffle
+  * partitions, so the suite runs under the engine's own baseline configs
+  * (the RocksDB state store included). */
 object SparkTestSession {
   lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
+    val s = GraftSession.builder("local[4]", 4)
       .appName("graft-tests")
-      .withExtensions(graft.plans.GraftExtensions)
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.warehouse.dir", "/tmp/graft_warehouse")
       .config("spark.ui.enabled", "false")
-      // CBO from session start — see GraftSession.builder (order-
-      // independence; only ANALYZEd graft_cbo_* tables carry stats).
-      .config("spark.sql.cbo.enabled", "true")
-      .config("spark.sql.cbo.joinReorder.enabled", "true")
-      // Bucketed-layout co-location (round-10, see GraftSession.builder).
-      .config("spark.sql.requireAllClusterKeysForCoPartition", "false")
-      .config("spark.sql.legacy.bucketedTableScan.outputOrdering", "true")
-      // RocksDB state store provider — the production session default
-      // (round-12, see GraftSession.builder): the WHOLE streaming suite
-      // runs under the provider the 100 TB deployment uses.
-      .config("spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
       .getOrCreate()
     s.sparkContext.setLogLevel("ERROR")
     s
