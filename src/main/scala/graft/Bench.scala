@@ -83,12 +83,6 @@ object Bench {
     // (2.58 s vs 2.49 s total). At 100 TB the threshold + AQE decide
     // per stats.
     "spark.sql.autoBroadcastJoinThreshold" -> "10485760",
-    // The pinned source cache is re-scanned 60+ times; dictionary/RLE
-    // decompression of the columnar batches on every scan costs more
-    // than the memory it saves at this corpus size (the whole corpus is
-    // ~60 MB uncompressed on a 128 GiB heap). DuckDB's buffer pool is
-    // likewise uncompressed at this scale.
-    "spark.sql.inMemoryColumnarStorage.compression" -> "false",
     // Static conf, effective because this is the JVM's first session:
     // the suite's ~20 queries × several codegen units per query exceed
     // the 100-entry default Janino class cache, so fresh per-run counts

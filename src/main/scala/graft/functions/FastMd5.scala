@@ -84,15 +84,12 @@ object FastMd5 {
     * missing #2: Catalyst CSE cannot merge the two distinct half
     * expressions, so on mostly-unique corpora every row digested twice).
     *
-    * Safety: the fast path is REFERENCE equality — under whole-stage
-    * codegen both halves read the child from the same per-row local, so
-    * the second half sees the very same UTF8String object; a fresh object
-    * (interpreted eval re-reads the row) falls back to a content compare
-    * against a PRIVATE byte copy, which is immune to the underlying row
-    * buffer being rewritten between rows. A miss only costs the digest
-    * that was always paid. */
+    * Safety: a hit is a CONTENT compare against a PRIVATE byte copy, so
+    * it is immune to the row buffer behind a reused UTF8String being
+    * rewritten between rows (a reference compare would serve the old
+    * digest for the same object with new bytes). A miss only costs the
+    * digest that was always paid. */
   private final class HalfCache {
-    var ref: UTF8String = _
     var bytes: Array[Byte] = _
     var dig: Array[Byte] = _
   }
@@ -113,12 +110,11 @@ object FastMd5 {
   def hashHalf(s: UTF8String, hi: Boolean): Long = {
     val c = halfCache.get()
     var raw = c.dig
-    if (raw == null || !((s eq c.ref) || sameBytes(s, c.bytes))) {
+    if (raw == null || !sameBytes(s, c.bytes)) {
       val b = s.getBytes
       val md = digest.get()
       md.reset()
       raw = md.digest(b)
-      c.ref = s
       // Private copy: `b` may alias the row buffer the scan reuses.
       c.bytes = java.util.Arrays.copyOf(b, b.length)
       c.dig = raw

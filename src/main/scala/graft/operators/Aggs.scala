@@ -15,15 +15,6 @@ import Parity._
 object Aggs {
   private def t(s: SparkSession, dir: String, n: String) = Tables.load(s, dir, n)
 
-  /** The orders agg family's hot projection, routed through the bounded
-    * columnar cache (graft.ColumnCache — a no-op pass-through projection
-    * unless a cache budget is set). The family shares ONE cache entry:
-    * rollup/cube/count-distinct/approx-distinct touch overlapping 2–4
-    * column slices of a fact whose full width would never fit a cache
-    * tier at 100 TB. */
-  private def ordersHot(s: SparkSession, dir: String, cols: String*) =
-    graft.ColumnCache.serve(s, dir, "orders", cols)
-
   /** D1 — multi-aggregate hash aggregation (beyond q1's shape). */
   val aggHashMulti = Q(
     "agg_hash_multi",
@@ -69,7 +60,7 @@ object Aggs {
     """SELECT o_orderstatus, COUNT(DISTINCT o_custkey) AS n_cust, COUNT(*) AS n
       |FROM orders GROUP BY o_orderstatus ORDER BY o_orderstatus""".stripMargin) {
     (s, dir) =>
-      ordersHot(s, dir, "o_orderstatus", "o_custkey")
+      t(s, dir, "orders").select("o_orderstatus", "o_custkey")
         .groupBy("o_orderstatus")
         .agg(countDistinct(col("o_custkey")).as("n_cust"), count(lit(1)).as("n"))
         .transform(sortedSmall(_, col("o_orderstatus")))
@@ -78,7 +69,7 @@ object Aggs {
   /** D4 — HLL++ approximate distinct. No SQL oracle (engine-specific HLL
     * internals, SURVEY §5.4); AggSpec asserts tolerance vs the exact twin. */
   val aggApproxDistinct = Q.noOracle("agg_approx_distinct") { (s, dir) =>
-    ordersHot(s, dir, "o_orderstatus", "o_custkey")
+    t(s, dir, "orders").select("o_orderstatus", "o_custkey")
       .groupBy("o_orderstatus")
       .agg(approx_count_distinct(col("o_custkey"), 0.02).as("approx_cust"))
       .transform(sortedSmall(_, col("o_orderstatus")))
@@ -93,7 +84,8 @@ object Aggs {
        |ORDER BY o_orderstatus NULLS FIRST, o_orderpriority NULLS FIRST""".stripMargin) {
     (s, dir) =>
       rollupFromBase(
-        ordersHot(s, dir, "o_orderstatus", "o_orderpriority", "o_totalprice"))(
+        t(s, dir, "orders")
+          .select("o_orderstatus", "o_orderpriority", "o_totalprice"))(
         _.rollup("o_orderstatus", "o_orderpriority"))
         .transform(sortedSmall(_, col("o_orderstatus").asc_nulls_first,
           col("o_orderpriority").asc_nulls_first))
@@ -132,7 +124,8 @@ object Aggs {
        |ORDER BY o_orderstatus NULLS FIRST, o_orderpriority NULLS FIRST""".stripMargin) {
     (s, dir) =>
       rollupFromBase(
-        ordersHot(s, dir, "o_orderstatus", "o_orderpriority", "o_totalprice"))(
+        t(s, dir, "orders")
+          .select("o_orderstatus", "o_orderpriority", "o_totalprice"))(
         _.cube("o_orderstatus", "o_orderpriority"))
         .transform(sortedSmall(_, col("o_orderstatus").asc_nulls_first,
           col("o_orderpriority").asc_nulls_first))

@@ -193,7 +193,8 @@ object AnnIndexLog {
     val estCands = graft.plans.PlanStats.estRows(cands, 20L,
       decompressionFactor = 1)
     val candArm =
-      if (estCands * 24 <= BigInt(256L << 20)) broadcast(cands) else cands
+      if (estCands * 24 <= BigInt(AnnOps.RerankBroadcastBudget)) broadcast(cands)
+      else cands
     candArm
       .join(emb.select(col("vec_id"), col("embedding")), Seq("vec_id"))
       .crossJoin(broadcast(q))

@@ -398,8 +398,9 @@ object AnnOps {
     arm.join(emb.select(col("vec_id"), col("embedding")), Seq("vec_id"))
   }
 
-  /** The one rerank/sidecast broadcast budget (round-16 review): the
-    * single-query gate, the batch gate, and the chunk sizer must agree —
+  /** The one ANN broadcast budget (round-16 review): the single-query
+    * gate, the batch gate, the candidate gates of the index and snapshot
+    * serves, the filtered serve's query gate and the chunk sizer agree —
     * two drifted copies would size chunks against a bound the gate no
     * longer honors and silently reintroduce the per-chunk SMJ corpus
     * re-shuffle. */
@@ -755,7 +756,8 @@ object AnnOps {
     val estCands = graft.plans.PlanStats.estRows(index, 20L,
       decompressionFactor = 1) * nProbe / math.max(1, model.nLists)
     val candArm =
-      if (estCands * 24 <= BigInt(256L << 20)) broadcast(cands) else cands
+      if (estCands * 24 <= BigInt(RerankBroadcastBudget)) broadcast(cands)
+      else cands
     candArm
       .join(emb.select(col("vec_id"), col("embedding")), Seq("vec_id"))
       .crossJoin(broadcast(q))
@@ -1496,7 +1498,7 @@ object AnnOps {
       // ANN batch serve; survivors are gate-bounded so their semi-join
       // side always fits a broadcast.
       val qRows = graft.plans.PlanStats.estRows(queries, 8L + dims * 4L)
-      val qSmall = qRows * (8L + dims * 4L) <= BigInt(256L << 20)
+      val qSmall = qRows * (8L + dims * 4L) <= BigInt(RerankBroadcastBudget)
       def sided(df: DataFrame): DataFrame =
         if (qSmall) broadcast(df) else df
       val sEmb = emb.join(broadcast(survivors), Seq("vec_id"), "left_semi")

@@ -21,7 +21,7 @@ object TxLogOps {
   /** Fresh UNIQUE scratch table dir per construction: a fixed shared path
     * would let two concurrent constructions of the same key (e.g. Verify
     * and a test JVM over the same corpus) delete each other's live table
-    * mid-lifecycle (review round-10; the TxLogProbe UUID convention).
+    * mid-lifecycle (review round-10; the TxLog scale rung's UUID convention).
     * Stale siblings from earlier constructions are pruned best-effort
     * once they are old enough to be provably dead. */
   private def freshTable(dir: String, name: String): String = {
@@ -118,7 +118,7 @@ object TxLogOps {
   /** Table-format lifecycle 3 — CLUSTERED ingest + stats-pruned range
     * read: ONE append with `clusterBy = o_orderkey` range-clusters the
     * batch into four files with tight, near-disjoint min/max intervals
-    * (the first-class form of the TxLogProbe result: merge write-amp
+    * (the first-class form of the TxLog scale-rung result: merge write-amp
     * 19.5× → 1.8×), then a range read that must only OPEN the overlapping
     * files (TxLogSpec pins the open count; this oracle pins the answer).
     * The 100 TB point: a range lookup on the stats column costs a handful

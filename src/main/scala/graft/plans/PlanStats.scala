@@ -70,36 +70,27 @@ object PlanStats {
   private val footerCache =
     new ConcurrentHashMap[String, (Long, Long, (Long, Long))]()
 
-  /** Per-top-level-column uncompressed (encoded) bytes per footer —
-    * feeds the projection-cache admission estimate (round 14). Same
-    * status-validated per-path keying as [[footerCache]]. */
-  private val columnBytesCache =
-    new ConcurrentHashMap[String, (Long, Long, Map[String, Long])]()
-
-  /** Serve `f`'s cached value when its (length, mtime) still match the
-    * live file; recompute (reusing the fresh FileStatus for the open)
-    * and replace otherwise. */
-  private def cachedByStatus[A](
-      cache: ConcurrentHashMap[String, (Long, Long, A)], f: String,
-      conf: org.apache.hadoop.conf.Configuration)(
-      compute: org.apache.hadoop.fs.FileStatus => A): A = {
+  /** `f`'s footer (rows, uncompressedBytes): the cached value when its
+    * (length, mtime) still match the live file; otherwise read (reusing
+    * the fresh FileStatus for the open) and replace. */
+  private def footerTotals(f: String,
+      conf: org.apache.hadoop.conf.Configuration): (Long, Long) = {
     val p = new Path(f)
     val status = p.getFileSystem(conf).getFileStatus(p)
-    val cur = cache.get(f)
+    val cur = footerCache.get(f)
     if (cur != null && cur._1 == status.getLen &&
         cur._2 == status.getModificationTime) cur._3
     else {
-      val v = compute(status)
-      cache.put(f, (status.getLen, status.getModificationTime, v))
+      val reader =
+        ParquetFileReader.open(HadoopInputFile.fromStatus(status, conf))
+      val v =
+        try {
+          val blocks = reader.getFooter.getBlocks.asScala
+          (blocks.map(_.getRowCount).sum, blocks.map(_.getTotalByteSize).sum)
+        } finally reader.close()
+      footerCache.put(f, (status.getLen, status.getModificationTime, v))
       v
     }
-  }
-
-  /** Drop all cached footer metadata (corpus regeneration; tests).
-    * Invoked by graft.ColumnCache.clear(). */
-  def clearFooterCaches(): Unit = {
-    footerCache.clear()
-    columnBytesCache.clear()
   }
 
   /** The distinct parquet data files under `df`'s optimized plan when EVERY
@@ -147,54 +138,13 @@ object PlanStats {
         var rows = BigInt(0)
         var bytes = BigInt(0)
         sampled.foreach { f =>
-          val (r, b) = cachedByStatus(footerCache, f, conf) { status =>
-            val reader =
-              ParquetFileReader.open(HadoopInputFile.fromStatus(status, conf))
-            try {
-              val blocks = reader.getFooter.getBlocks.asScala
-              (blocks.map(_.getRowCount).sum, blocks.map(_.getTotalByteSize).sum)
-            } finally reader.close()
-          }
+          val (r, b) = footerTotals(f, conf)
           rows += r
           bytes += b
         }
         if (sampled.length == total) Some((rows, bytes))
         else Some((rows * total / sampled.length,
           bytes * total / sampled.length))
-      } catch { case NonFatal(_) => None }
-    }
-
-  /** Uncompressed (encoded) byte total of just the named TOP-LEVEL columns,
-    * summed over parquet footers — the size a columnar projection cache of
-    * those columns is bounded by (in-memory dictionary/RLE compression only
-    * shrinks it further). Same sampling/extrapolation and zero-Spark-job
-    * discipline as [[parquetLeafStats]]; None when any plan leaf is not a
-    * parquet file relation or footers are unreadable. */
-  def parquetColumnBytes(df: DataFrame, cols: Seq[String]): Option[BigInt] =
-    sampledParquetFiles(df).flatMap { case (sampled, total) =>
-      try {
-        val conf = df.sparkSession.sessionState.newHadoopConf()
-        val wanted = cols.toSet
-        var bytes = BigInt(0)
-        sampled.foreach { f =>
-          val perCol = cachedByStatus(columnBytesCache, f, conf) { status =>
-            val reader =
-              ParquetFileReader.open(HadoopInputFile.fromStatus(status, conf))
-            try {
-              reader.getFooter.getBlocks.asScala
-                .flatMap(_.getColumns.asScala)
-                .groupBy(_.getPath.toDotString.takeWhile(_ != '.'))
-                .map { case (top, chunks) =>
-                  top -> chunks.map(_.getTotalUncompressedSize).sum
-                }
-            } finally reader.close()
-          }
-          bytes += perCol.collect {
-            case (top, b) if wanted.contains(top) => BigInt(b)
-          }.sum
-        }
-        if (sampled.length == total) Some(bytes)
-        else Some(bytes * total / sampled.length)
       } catch { case NonFatal(_) => None }
     }
 

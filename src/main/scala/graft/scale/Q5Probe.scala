@@ -13,7 +13,6 @@ object Q5Probe {
     val spark = graft.GraftSession.local(32)
       .config("spark.sql.files.maxPartitionBytes", "33554432")
       .config("spark.sql.sources.bucketing.autoBucketedScan.enabled", "false")
-      .config("spark.sql.inMemoryColumnarStorage.compression", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     // Input caching mirrors the sfx100 bench session; at sfx1000 the

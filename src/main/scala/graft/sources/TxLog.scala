@@ -432,7 +432,7 @@ object TxLog {
   /** Append a batch. `clusterBy` range-clusters the batch on a column
     * before writing (repartitionByRange + within-file sort), so each new
     * file carries a TIGHT, near-disjoint min/max interval — measured on
-    * the 15 M-row TxLogProbe ingest: merge write-amplification 19.5× →
+    * the 15 M-row TxLog scale-rung ingest (SCALE.md): merge write-amp 19.5× →
     * 1.8×, because stats-overlap pruning then rewrites only the files a
     * mutation's key range actually touches. At 100 TB clustered ingest is
     * the difference between a point-range read opening a handful of files

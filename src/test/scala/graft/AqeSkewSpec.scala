@@ -11,7 +11,7 @@ import org.apache.spark.sql.functions._
   * `skew=true` and results are identical to the unsplit join.
   *
   * The measured AQE-vs-manual-salt crossover at replica scale lives in
-  * SCALE.md §skew (graft.scale.SkewProbe).
+  * SCALE.md §skew.
   */
 class AqeSkewSpec extends SparkSpec {
   import spark.implicits._

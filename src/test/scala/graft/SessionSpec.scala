@@ -30,6 +30,26 @@ class SessionSpec extends SparkSpec {
         offenders.mkString(", "))
   }
 
+  test("every spark.* key the engine sets is a Spark config key or a " +
+      "spark.graft.* key the engine reads") {
+    val root = Paths.get("src", "main")
+    val src = Files.walk(root).iterator.asScala
+      .filter(p => Files.isRegularFile(p) && p.toString.endsWith(".scala"))
+      .map(p => new String(Files.readAllBytes(p), UTF_8)).mkString("\n")
+    def keys(re: String) = re.r.findAllMatchIn(src).map(_.group(1)).toSet
+    val set = keys("""(?:\.config|conf\.set)\(\s*"(spark\.[^"]+)"""") ++
+      Bench.sessionConf.map(_._1)
+    assert(set.contains("spark.sql.session.timeZone") &&
+      set.contains("spark.sql.sources.partitionOverwriteMode"),
+      s"the scan missed a .config or a conf.set call: $set")
+    val read = keys(
+      """(?:conf\.get|confOpt)\([^")]*"(spark\.graft\.[^"]+)"""")
+    val unknown = set.filterNot(k =>
+      org.apache.spark.GraftTestBridge.isSparkConfKey(k) || read.contains(k))
+    assert(unknown.isEmpty,
+      s"keys Spark does not register and the engine does not read: $unknown")
+  }
+
   test("Bench's [floor] line and JSON line parse under a comma-decimal " +
       "default locale") {
     val saved = Locale.getDefault

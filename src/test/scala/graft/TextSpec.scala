@@ -235,7 +235,7 @@ class TextSpec extends SparkSpec {
     val b = UTF8String.fromString("beta")
     val hiA = FastMd5.hashHalf(a, hi = true)
     val hiB = FastMd5.hashHalf(b, hi = true)
-    val loA = FastMd5.hashHalf(a, hi = false) // same REF → the eq fast path
+    val loA = FastMd5.hashHalf(a, hi = false)
     val loB = FastMd5.hashHalf(b, hi = false)
     assert(f"$hiA%016x$loA%016x" == refHex("alpha"))
     assert(f"$hiB%016x$loB%016x" == refHex("beta"))
@@ -247,6 +247,14 @@ class TextSpec extends SparkSpec {
     buf(0) = 'j'.toByte
     val mutated = FastMd5.hashHalf(UTF8String.fromBytes(buf), hi = true)
     assert(f"$mutated%016x" == refHex("jello world").take(16))
+    // The SAME object over a buffer rewritten between its hi and lo
+    // halves: the lo half must digest the new bytes.
+    val buf2 = "hello there".getBytes("UTF-8")
+    val same = UTF8String.fromBytes(buf2)
+    FastMd5.hashHalf(same, hi = true)
+    buf2(0) = 'j'.toByte
+    val lo = FastMd5.hashHalf(same, hi = false)
+    assert(f"$lo%016x" == refHex("jello there").drop(16))
   }
 
   test("stratified sample predicate is reproducible across partitionings") {
