@@ -110,19 +110,21 @@ object Bench {
     s"[floor] job_best_ms=${ms(jb)} job_med_ms=${ms(jm)} " +
       s"sql_best_ms=${ms(sb)} sql_med_ms=${ms(sm)}"
 
-  /** The one machine-parsed stdout JSON line. "floor" is ADDITIVE: the
-    * other fields keep their meaning; carrying the same-boot floor sample
-    * INSIDE the archived JSON makes the code-vs-boot split of any total a
-    * one-lookup check instead of a cross-file hunt. Query times use
-    * Double.toString, which is locale-independent. */
+  /** The one machine-parsed stdout JSON line. "floor" and "cpus" are
+    * ADDITIVE: the other fields keep their meaning; carrying the same-boot
+    * floor sample INSIDE the archived JSON makes the code-vs-boot split of
+    * any total a one-lookup check instead of a cross-file hunt, and
+    * "cpus" (the session's default parallelism) keeps totals taken at
+    * different core counts from being compared as like with like. Query
+    * times use Double.toString, which is locale-independent. */
   def jsonLine(results: Seq[(String, Double)], jb: Double, jm: Double,
-      sb: Double, sm: Double, sfDir: String): String = {
+      sb: Double, sm: Double, sfDir: String, cpus: Int): String = {
     val qs = results.map { case (k, v) => "\"" + k + "\":" + v }
       .mkString("{", ",", "}")
     val total = results.map(_._2).filter(_ >= 0).sum
     val floorJson = s"""{"job_best_ms":${ms(jb)},"job_med_ms":${ms(jm)},""" +
       s""""sql_best_ms":${ms(sb)},"sql_med_ms":${ms(sm)}}"""
-    s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"floor":$floorJson,"sf":"$sfDir"}"""
+    s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"floor":$floorJson,"sf":"$sfDir","cpus":$cpus}"""
   }
 
   def main(args: Array[String]): Unit = {
@@ -224,7 +226,8 @@ object Bench {
         org.apache.spark.sql.functions.col("id"))).collect(): Unit
     }
     println(floorLine(jb, jm, sb, sm))
-    println(jsonLine(results, jb, jm, sb, sm, sfDir))
+    println(jsonLine(results, jb, jm, sb, sm, sfDir,
+      spark.sparkContext.defaultParallelism))
     System.out.flush()
     spark.stop()
   }

@@ -211,53 +211,3 @@ object BenchProbe {
     spark.stop()
   }
 }
-
-/** Minhash index-build stage decomposition: where does ingest time go —
-  * shingle HOF, sig kernel, or shh kernel? Separate main so it can run
-  * against a scale dir without paying BenchProbe's bench-suite probes.
-  * Usage: MinhashProbe <sfDir>
-  */
-object MinhashProbe {
-  def main(args: Array[String]): Unit = {
-    val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
-    val spark = GraftSession.local(32).getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    import org.apache.spark.sql.functions._
-    graft.operators.VectorOps.registerFns(spark)
-
-    def best3(label: String)(f: => Unit): Unit = {
-      f
-      val runs = (1 to 3).map { _ =>
-        val t0 = System.nanoTime(); f; (System.nanoTime() - t0) / 1e9
-      }
-      println(f"[minhash-probe] $label%-42s best=${runs.min}%.1f s")
-    }
-
-    val docs = Tables.load(spark, sfDir, "documents")
-      .filter(size(split(col("text"), " ")) >= 3)
-    val shingles = array_sort(array_distinct(expr(
-      """transform(sequence(1, greatest(size(split(text, ' ')) - 2, 1)),
-        |  i -> concat(element_at(split(text, ' '), i), ' ',
-        |              coalesce(element_at(split(text, ' '), i + 1), ''), ' ',
-        |              coalesce(element_at(split(text, ' '), i + 2), '')))"""
-        .stripMargin)))
-    val sh = docs.select(col("doc_id"), shingles.as("sh"))
-    best3("shingle stage only (agg size)") {
-      sh.agg(sum(size(col("sh")))).collect()
-    }
-    best3("shingles + sig kernel") {
-      sh.select(call_function("minhash_sig", col("sh"), lit(32)).as("sig"))
-        .agg(sum(size(col("sig")))).collect()
-    }
-    best3("shingles + shh kernel") {
-      sh.select(array_sort(call_function("xxhash64_map", col("sh"))).as("shh"))
-        .agg(sum(size(col("shh")))).collect()
-    }
-    best3("full index (sig + shh)") {
-      graft.operators.VectorOps.minhashIndex(
-        Tables.load(spark, sfDir, "documents"), 32)
-        .agg(sum(size(col("shh")))).collect()
-    }
-    spark.stop()
-  }
-}

@@ -248,7 +248,7 @@ object Verify {
       // Delete lifecycle (round-13): no tombstoned id may surface, and
       // recall is measured vs the exact cosine top-20 over the SURVIVING
       // corpus (linear cost — one query vs corpus — runs at every tier).
-      // AnnSpec pins masked ≡ compacted ≡ survivor-rebuilt equivalence.
+      // AnnLogSpec pins masked ≡ post-delete ≡ survivor-rebuilt serves.
       check("ann_delete_ivf") {
         val emb = Tables.load(spark, sfDir, "embeddings")
         val got = SparkEntry.queries("ann_delete_ivf")(spark, sfDir)
@@ -368,31 +368,24 @@ object Verify {
         s"""{"queries": 3, "single_serve_mismatches": $mismatches, """ +
           s""""pass": ${mismatches == 0}}"""
       }
-      // Rebalance (round-14): replay the declared key's churn sequence and
-      // prove the rebalanced index content is IDENTICAL to a fresh
-      // assignment of the full corpus under the refined model (the
-      // threshold-0 law AnnSpec pins) — plus row accounting. Linear cost.
+      // Rebalance (round-14): replay the declared key's churn sequence on
+      // the log and prove the rebalanced snapshot's content is IDENTICAL
+      // to a fresh assignment of the full corpus under the refined model
+      // it publishes (the threshold-0 law AnnLogSpec pins) — plus row
+      // accounting. Linear cost.
       check("ann_rebalance_ivf") {
         val emb = Tables.load(spark, sfDir, "embeddings")
-        val hist = emb.filter(col("vec_id") % 10 =!= 0)
-        val model = graft.operators.AnnOps.fitAnnModel(spark, hist)
-        val idxDir = java.nio.file.Files
-          .createTempDirectory("graft_verify_rebalance").toString
-        graft.operators.AnnOps.ivfUpsert(spark,
-            graft.operators.AnnOps.annIndex(spark, hist, model),
-            emb.filter(col("vec_id") % 10 === 0), model)
-          .write.mode("overwrite").partitionBy("list_id").parquet(idxDir)
-        val (newModel, affected, _) = graft.operators.AnnOps
-          .annRebalance(spark, idxDir, emb, model)
+        val (idxDir, r) =
+          graft.operators.AnnOps.rebalancedChurnLog(spark, emb)
         def flat(df: org.apache.spark.sql.DataFrame) = df
-          .select(col("vec_id"), col("list_id").cast("int"),
+          .select(col("vec_id"), col("list_id"),
             concat_ws(",", col("codes").cast("array<string>")))
           .orderBy("vec_id").collect().map(_.toSeq).toSeq
-        val got = flat(spark.read.parquet(idxDir))
-        val want = flat(graft.operators.AnnOps.annIndex(spark, emb, newModel))
+        val got = flat(graft.operators.AnnIndexLog.postings(spark, idxDir, r))
+        val want = flat(graft.operators.AnnOps.annIndex(spark, emb, r.model))
         val n = emb.count()
         s"""{"rows": ${got.size}, "n_vectors": $n, """ +
-          s""""affected_lists": ${affected.size}, """ +
+          s""""manifest_seq": ${r.seq}, """ +
           s""""fresh_assignment_match": ${got == want}, """ +
           s""""pass": ${got.size == n && got == want}}"""
       }

@@ -205,10 +205,6 @@ object AnnIndexLog {
       .limit(k)
   }
 
-  /** Incremental upsert: quantize `newBatch` under the CURRENT model and
-    * append — only the batch is scanned, history never re-quantizes (the
-    * [[AnnOps.ivfUpsert]] contract), and the new rows become visible
-    * atomically at the manifest append. */
   /** Mutators build on the resolved snapshot; if the postings log is
     * AHEAD of it (a crashed mutation's orphan commit), building on
     * "latest" would silently publish the orphan's files at the next
@@ -221,6 +217,10 @@ object AnnIndexLog {
         s"(orphaned commit from a crashed mutation) — repair before mutating")
   }
 
+  /** Incremental upsert: quantize `newBatch` under the CURRENT model and
+    * append — only the batch is scanned, history never re-quantizes (the
+    * [[AnnOps.ivfUpsert]] contract), and the new rows become visible
+    * atomically at the manifest append. */
   def upsert(spark: SparkSession, indexDir: String,
       newBatch: DataFrame): Long = {
     val r = resolve(spark, indexDir)
@@ -268,48 +268,52 @@ object AnnIndexLog {
       pv, writeModelBlob(indexDir, r.seq + 1, r.model))
   }
 
-  /** Rebalance under churn — the [[AnnOps.annRebalance]] semantics
-    * (Lloyd refinement seeded from the old model over a bounded sample;
-    * per-list out-drift gating; movers re-assigned, stayers untouched)
-    * re-expressed file-atomically over the log:
+  /** Rebalance under churn: upserts append to frozen lists
+    * and deletes shrink them, but nothing re-trains — after heavy churn
+    * list sizes skew, centroids drift off the live distribution, and
+    * serve recall degrades with no remedy but a full rebuild. This
+    * mutator:
     *
-    *  - only files of OVER-THRESHOLD lists are rewritten (one commit:
-    *    add survivors+movers, remove touched files) — movers land in
-    *    their target lists as NEW clustered files, so targets are never
-    *    rewritten (the file-level log is strictly cheaper here than the
-    *    partition-dir overwrite, which had to rewrite target partitions);
-    *  - the refined model + rebalanced postings version publish together
-    *    in ONE manifest row — a serve resolved before it keeps the old
-    *    (model, postings) pair, a serve after gets the refined pair;
-    *    probing a new layout with an old model (the documented race of
-    *    the bare-dir rebalance) is structurally impossible.
+    *  1. REFINES the centroids by Lloyd iterations SEEDED FROM THE
+    *     RESOLVED MODEL over the bounded [[AnnOps.fitSample]] of `emb`
+    *     (the live corpus — never a corpus-sized fit). Seeding preserves
+    *     centroid ids by position, so after small drift most rows keep
+    *     their assignment and the rewrite stays proportional to the
+    *     drift, not the corpus — a fresh k-means would scramble ids and
+    *     force a full rewrite every time.
+    *  2. GATES per list: one narrow corpus scan computes each vector's
+    *     refined assignment (codes are NOT recomputed, the PQ codebooks
+    *     stay frozen); a list rebalances only when the fraction of its
+    *     members moving out exceeds `driftThreshold` (per-list stats are
+    *     an nLists-row collect). Rows in below-threshold lists stay put
+    *     — bounded staleness in exchange for bounded rewrite.
+    *  3. REWRITES file-atomically: only files of over-threshold lists
+    *     are rewritten (one commit: add survivors+movers, remove touched
+    *     files) — movers land in their target lists as NEW clustered
+    *     files, so targets are never rewritten.
     *
-    * At driftThreshold 0 the rebalanced content is row-identical to a
-    * fresh [[AnnOps.annIndex]] build under the refined model (AnnLogSpec
-    * pins it — the [[AnnOps.annRebalance]] equivalence). Returns the new
+    * The refined model and the rebalanced postings version publish
+    * together in ONE manifest row — a serve resolved before it keeps the
+    * old (model, postings) pair, a serve after gets the refined pair, so
+    * probing a new layout with an old model cannot happen.
+    *
+    * Every postings row must have a live embedding in `emb` (delete
+    * first — the inner join drops rows without a vector, which would
+    * silently shrink the rewritten lists). At driftThreshold 0 the
+    * rebalanced content is row-identical to a fresh [[AnnOps.annIndex]]
+    * build under the refined model (AnnLogSpec pins it). Returns the new
     * manifest seq and the refined model. */
   def rebalance(spark: SparkSession, indexDir: String, emb: DataFrame,
       lloydIters: Int = 3, fitSampleCap: Long = 200000L,
       driftThreshold: Double = 0.0): (Long, AnnModel) = {
     VectorOps.registerFns(spark)
-    import graft.Stage.StagedOps
     require(driftThreshold >= 0.0 && driftThreshold < 1.0,
       s"driftThreshold must be in [0, 1), got $driftThreshold")
     val r = resolve(spark, indexDir)
     requireNoOrphans(indexDir, r)
-    val sample =
-      if (graft.plans.PlanStats.estRows(emb, 16L) <= BigInt(fitSampleCap))
-        emb
-      else {
-        val actual = emb.count()
-        if (actual <= fitSampleCap) emb
-        else {
-          val f = (actual + fitSampleCap - 1) / fitSampleCap
-          emb.filter(pmod(xxhash64(col("vec_id")), lit(f)) === 0).staged
-        }
-      }
     val refinedCents = ClusterOps.kmeansFit(spark,
-        sample.select(col("vec_id"), col("embedding")),
+        AnnOps.fitSample(emb, fitSampleCap)
+          .select(col("vec_id"), col("embedding")),
         k = r.model.nLists, iters = lloydIters,
         init = Some(r.model.centroids.toArray))._2.sortBy(_._1).toSeq
     val refined = r.model.copy(centroids = refinedCents)

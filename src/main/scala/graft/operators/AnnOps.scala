@@ -621,40 +621,48 @@ object AnnOps {
       m: Int, dsub: Int, ksub: Int,
       codebooks: Array[Array[Seq[Double]]])
 
-  /** Fit both quantizers once (the ingest-time model build). */
   /** Fit both quantizers once (the ingest-time model build). Above
-    * `fitSampleCap` rows the quantizers train on a deterministic
-    * hash-sampled subset, MATERIALIZED once (Stage): kmeans iterations and
-    * the m per-subspace codebook refinements then scan the bounded sample
-    * instead of re-reading the corpus m+iters times — quantizer quality
-    * needs a representative sample, not the population (the FAISS train/
-    * add split), and at 100 TB re-scanning the corpus 96× for codebooks
-    * is the difference between a model fit and a cluster outage. Below
-    * the cap (every verify tier) nothing changes — the replay oracles
-    * stay byte-identical. */
+    * `fitSampleCap` rows the quantizers train on the [[fitSample]]
+    * subset: kmeans iterations and the m per-subspace codebook
+    * refinements then scan the bounded sample instead of re-reading the
+    * corpus m+iters times — quantizer quality needs a representative
+    * sample, not the population (the FAISS train/add split), and at
+    * 100 TB re-scanning the corpus 96× for codebooks is the difference
+    * between a model fit and a cluster outage. Below the cap (every
+    * verify tier) nothing changes — the replay oracles stay
+    * byte-identical. */
   def fitAnnModel(s: SparkSession, emb: DataFrame, nLists: Int = 8,
       m: Int = 8, dsub: Int = 8, ksub: Int = 16,
       fitSampleCap: Long = 200000L): AnnModel = {
-    import graft.Stage.StagedOps
-    // The zero-job footer estimate is filter-blind (whole-table counts),
-    // so it only serves as the CHEAP ADMISSION test; when it says "over
-    // the cap" the sampling fraction is derived from one EXACT count —
-    // a filtered frame (estimate 2 M, actual 250 k) would otherwise train
-    // on est/cap-fold fewer rows than the cap intends, degenerating the
-    // quantizers with no error (code review round-11). One linear count
-    // at model-fit time is ingest-class cost, dwarfed by the fit itself.
-    val fitSet =
-      if (graft.plans.PlanStats.estRows(emb, 16L) <= BigInt(fitSampleCap)) emb
-      else {
-        val actual = emb.count()
-        if (actual <= fitSampleCap) emb
-        else {
-          val f = (actual + fitSampleCap - 1) / fitSampleCap
-          emb.filter(pmod(xxhash64(col("vec_id")), lit(f)) === 0).staged
-        }
-      }
+    val fitSet = fitSample(emb, fitSampleCap)
     AnnModel(nLists, ivfFit(s, fitSet, nLists), m, dsub, ksub,
       pqFit(s, fitSet, m, dsub, ksub))
+  }
+
+  /** The model-training subset of `emb`: the frame itself up to `cap`
+    * rows, else a deterministic hash sample of about `cap` rows,
+    * MATERIALIZED once (Stage) so every training pass re-reads the
+    * sample, not the corpus. Shared by [[fitAnnModel]] and the
+    * [[AnnIndexLog.rebalance]] refinement.
+    *
+    * The zero-job footer estimate is filter-blind (whole-table counts),
+    * so it only serves as the CHEAP ADMISSION test; when it says "over
+    * the cap" the sampling fraction is derived from one EXACT count — a
+    * filtered frame (estimate 2 M, actual 250 k) would otherwise train on
+    * est/cap-fold fewer rows than the cap intends, degenerating the
+    * quantizers with no error (code review round-11). One linear count at
+    * model-fit time is ingest-class cost, dwarfed by the fit itself. */
+  private[operators] def fitSample(emb: DataFrame, cap: Long): DataFrame = {
+    import graft.Stage.StagedOps
+    if (graft.plans.PlanStats.estRows(emb, 16L) <= BigInt(cap)) emb
+    else {
+      val actual = emb.count()
+      if (actual <= cap) emb
+      else {
+        val f = (actual + cap - 1) / cap
+        emb.filter(pmod(xxhash64(col("vec_id")), lit(f)) === 0).staged
+      }
+    }
   }
 
   /** Materialized per-vector index rows: (vec_id, list_id, codes) — ONE
@@ -691,19 +699,11 @@ object AnnOps {
   def annIndex(s: SparkSession, emb: DataFrame, model: AnnModel,
       payload: String): DataFrame = {
     VectorOps.registerFns(s)
-    val dims = model.centroids.head._2.length
-    val cids = model.centroids.map(_._1)
-    val centFlat = model.centroids.flatMap(_._2)
     // Codebook entries pad to dsub with zeros: dot terms ×0 vanish, so the
     // padded kernel score equals the column form's min-length dot exactly.
     val cbFlat = (0 until model.m).flatMap(mm => (0 until model.ksub)
       .flatMap(j => model.codebooks(mm)(j).padTo(model.dsub, 0.0)))
-    val pos = call_function("nearest_centroid", col("embedding"),
-      typedLit(centFlat), lit(cids.length), lit(dims))
-    val core = Seq(col("vec_id"),
-      // The kernel returns the POSITION in the sorted centroid matrix;
-      // translate to the model's cid (identical when cids are 0..k-1).
-      element_at(typedLit(cids), pos + 1).as("list_id"),
+    val core = Seq(col("vec_id"), listAssign(model).as("list_id"),
       call_function("pq_codes", col("embedding"), typedLit(cbFlat),
         lit(model.m), lit(model.dsub), lit(model.ksub)).as("codes"))
     payload match {
@@ -1417,32 +1417,13 @@ object AnnOps {
       rerankInt8 = Some(int8))
   }
 
-  /** Batched serve under a tombstone mask — the composition of
-    * [[ivfPqKnnBatch]] and the delete lifecycle: candidates anti-join the
-    * broadcast tombstone set before the ADC scan, pool pinned to the
-    * UNMASKED index estimate (the [[ivfPqKnnFromIndexMasked]] contract,
-    * so batched-masked ≡ per-query-masked at the same pool — AnnSpec). */
-  def ivfPqKnnBatchMasked(s: SparkSession, emb: DataFrame, index: DataFrame,
-      tombstones: DataFrame, model: AnnModel, queries: DataFrame, k: Int,
-      nProbe: Int = 3, nCandidates: Int = -1): DataFrame = {
-    val dims = model.centroids.head._2.length
-    val pool = if (nCandidates > 0) nCandidates
-      else pqPoolFor(dims, graft.plans.PlanStats.estRows(
-        index, 20L + model.m * 4L, decompressionFactor = 1))
-    val masked = index.join(
-      broadcast(tombstones.select(col("vec_id"))), Seq("vec_id"),
-      "left_anti")
-    ivfPqKnnBatch(s, emb, masked, model, queries, k, nProbe,
-      nCandidates = pool)
-  }
-
   /** Predicate-FILTERED batched composed IVF+PQ serve (round-14, VERDICT
     * r13 next-item 1 — the first production vector-search query: "top-k
     * similar WHERE lang = 'en' AND date > X"): candidates must satisfy an
     * arbitrary metadata `predicate` over a (vec_id → attrs) side table.
-    * Generalizes the tombstone mask ([[ivfPqKnnBatchMasked]] is the
-    * special case predicate = "vec_id ∉ deleted") with the two scale
-    * controls a fixed-probe filtered serve silently lacks:
+    * Generalizes the tombstone mask (a masked serve is the special case
+    * predicate = "vec_id ∉ deleted") with the two scale controls a
+    * fixed-probe filtered serve silently lacks:
     *
     *  1. SELECTIVITY-AWARE PROBE WIDENING. A selective filter starves the
     *     candidate pool at fixed nProbe — the filtered top-k can live in
@@ -1561,17 +1542,18 @@ object AnnOps {
     * the probed index rows BEFORE the ADC scan, so a deleted vector can
     * never surface — not as a result, not even as a candidate that
     * crowds the pool. The tombstone set is broadcast: between
-    * compactions it is bounded by the compaction policy (the same
+    * physical deletes it is bounded by the delete policy (the same
     * contract as GraftLog's copy-on-write delete queue and IndexOps'
     * `index_delete_docs` masks — this composes those two in-repo
     * patterns), so the mask is a broadcast-hash anti-join on an 8-byte
     * key inside the already-pruned `nProbe` lists, never a shuffle.
     *
     * The candidate pool is sized from the UNMASKED stored index (stable
-    * across delete churn; becomes exact again at compaction) — so a
-    * masked serve over index I with tombstones T is row-identical to the
-    * unmasked serve over the compacted index (I ∖ T) at the same
-    * explicit pool, which AnnSpec pins. */
+    * across delete churn; becomes exact again once
+    * [[AnnIndexLog.delete]] removes the rows) — so a masked serve over
+    * index I with tombstones T is row-identical to the unmasked serve
+    * over the post-delete snapshot (I ∖ T) at the same explicit pool,
+    * which AnnLogSpec pins. */
   def ivfPqKnnFromIndexMasked(s: SparkSession, emb: DataFrame,
       index: DataFrame, tombstones: DataFrame, model: AnnModel,
       queryId: Long, k: Int, nProbe: Int = 3,
@@ -1587,86 +1569,13 @@ object AnnOps {
       nCandidates = pool)
   }
 
-  /** LIST-LOCAL compaction of a stored (list_id-partitioned) IVF/PQ index
-    * directory: physically removes tombstoned rows by rewriting ONLY the
-    * partitions that contain them. The untouched lists' files are never
-    * read or rewritten (dynamic partition overwrite — AnnSpec pins that
-    * unaffected partition files are byte-identical afterwards), so the
-    * 100 TB compaction cost is proportional to the deleted vectors'
-    * list footprint, not the corpus. Lists whose every row is tombstoned
-    * get their partition directory dropped outright (dynamic overwrite
-    * only rewrites partitions that receive output rows — without the
-    * explicit drop the fully-deleted list would silently SURVIVE, the
-    * classic dynamic-overwrite gap). Returns (affected, emptied) list
-    * ids. After compaction the serve needs no mask: content ≡ a fresh
-    * [[annIndex]] build over the surviving vectors under the same frozen
-    * model (per-row quantization — AnnSpec pins the equivalence). */
-  /** Local filesystem form of a path spark also accepts as a file: URI —
-    * ONE normalization used by every java.io touch in the compaction
-    * (code review round-13: the require used the raw string while the
-    * emptied-dir cleanup URI-parsed it, so a path with a space passed the
-    * rewrite then threw before the cleanup — leaving a fully-deleted
-    * list's files serving tombstoned vectors). */
-  private def localPath(p: String): String =
-    if (p.startsWith("file:")) new java.net.URI(p).getPath else p
-
-  def annCompactStored(s: SparkSession, indexPath: String,
-      tombstones: DataFrame): (Seq[Int], Seq[Int]) = {
-    // Partitioned layout REQUIRED: on a flat directory the dynamic
-    // partition overwrite below would leave the original un-partitioned
-    // files in place while ADDING list_id= dirs — silent row duplication,
-    // the worst failure mode a compaction can have.
-    require(Option(new java.io.File(localPath(indexPath)).listFiles())
-        .exists(_.exists(f =>
-          f.isDirectory && f.getName.startsWith("list_id="))),
-      s"annCompactStored expects a list_id-partitioned index at $indexPath")
-    val idx = s.read.parquet(indexPath)
-    val tombs = broadcast(tombstones.select(col("vec_id")))
-    // Affected-list discovery: when the delete queue carries `list_id`
-    // (known at delete time — the serve's probe already resolves it),
-    // discovery reads NO index data at all; otherwise one column-pruned
-    // (vec_id, list_id) scan of the index resolves it. The
-    // proportional-cost contract in the scaladoc covers the REWRITE;
-    // discovery is this lookup (code review round-13).
-    val affected =
-      (if (tombstones.columns.contains("list_id"))
-         tombstones.select("list_id")
-       else idx.join(tombs, Seq("vec_id")).select("list_id"))
-        .distinct()
-        .collect().map(_.getInt(0)).toSeq.sorted
-    if (affected.isEmpty) return (Nil, Nil)
-    val survivors = idx.filter(col("list_id").isin(affected: _*))
-      .join(tombs, Seq("vec_id"), "left_anti")
-      // The partition-pruned read materializes before the overwrite
-      // below deletes the very files it reads from (self-overwrite).
-      .localCheckpoint(true)
-    val surviving = survivors.select("list_id").distinct()
-      .collect().map(_.getInt(0)).toSet
-    val emptied = affected.filterNot(surviving)
-    val prev = s.conf.getOption("spark.sql.sources.partitionOverwriteMode")
-    s.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try survivors.write.mode("overwrite").partitionBy("list_id")
-      .parquet(indexPath)
-    finally prev match {
-      case Some(v) => s.conf.set("spark.sql.sources.partitionOverwriteMode", v)
-      case None => s.conf.unset("spark.sql.sources.partitionOverwriteMode")
-    }
-    emptied.foreach { lid =>
-      val dir = new java.io.File(localPath(indexPath), s"list_id=$lid")
-      if (dir.isDirectory) {
-        dir.listFiles().foreach(_.delete()); dir.delete()
-      }
-    }
-    (affected, emptied)
-  }
-
   /** K4-lifecycle — the declared delete/tombstone serve: a third of the
     * corpus (vec_id ≡ 1 mod 3) is deleted, and the composed IVF+PQ serve
     * runs under the tombstone mask. No-oracle (learned quantizer, the K2
     * precedent); the Verify selfcheck proves no deleted id is returned
     * and measures recall vs the exact cosine top-k over the SURVIVING
-    * corpus; AnnSpec pins masked ≡ compacted ≡ survivor-rebuilt serve
-    * and the list-local compaction file accounting. */
+    * corpus; AnnLogSpec pins masked ≡ post-delete snapshot ≡
+    * survivor-rebuilt serve and the delete's file accounting. */
   val annDeleteIvf = Q.noOracle("ann_delete_ivf") { (s, dir) =>
     val emb = t(s, dir, "embeddings")
     val model = fitAnnModel(s, emb)
@@ -1676,19 +1585,19 @@ object AnnOps {
       k = 20, nProbe = 3)
   }
 
-  /** [[AnnIndexLog]] accessors for the private kernels: probe-list
-    * ranking and list assignment under a model (identical ranking/
-    * assignment to the direct serve — the log-backed serve must score
+  /** [[AnnIndexLog]] accessor for the private probe-list ranking
+    * (identical to the direct serve's — the log-backed serve must score
     * exactly like [[ivfKnnFromIndex]]). */
   private[operators] def probeListsForModel(model: AnnModel,
       q: Seq[Float], nProbe: Int): Seq[Int] =
     probeListsFor(model.centroids, q, nProbe)
-  private[operators] def listAssign(model: AnnModel): Column =
-    listAssignExpr(model)
 
-  /** Nearest-centroid list assignment under `model` — the native-kernel
-    * expression [[annIndex]] uses, shared with the rebalance scan. */
-  private def listAssignExpr(model: AnnModel): Column = {
+  /** Nearest-centroid list id of `embedding` under `model` — the native
+    * [[graft.functions.NearestCentroid]] kernel. It returns the POSITION
+    * in the sorted centroid matrix; the lookup translates it to the
+    * model's cid (identical when cids are 0..k-1). [[annIndex]] assigns
+    * with it, and so does the [[AnnIndexLog.rebalance]] re-assignment. */
+  private[operators] def listAssign(model: AnnModel): Column = {
     val dims = model.centroids.head._2.length
     val cids = model.centroids.map(_._1)
     val centFlat = model.centroids.flatMap(_._2)
@@ -1697,142 +1606,37 @@ object AnnOps {
     element_at(typedLit(cids), pos + 1)
   }
 
-  /** REBALANCE of a stored IVF index under churn (round-14, VERDICT r13
-    * next-item 2 — the missing repair operator): upserts append to frozen
-    * lists and deletes compact them, but nothing re-trained — after heavy
-    * churn list sizes skew, centroids drift off the live distribution,
-    * and serve recall degrades with no remedy but a full rebuild. This
-    * operator:
-    *
-    *  1. REFINES the centroids by Lloyd iterations SEEDED FROM THE OLD
-    *     MODEL over a bounded hash-sample of the current corpus (the
-    *     fitAnnModel train/add split — never a corpus-sized fit). Seeding
-    *     preserves centroid ids by position, so after small drift most
-    *     rows keep their assignment and the rewrite stays proportional
-    *     to the drift, not the corpus — a fresh k-means would scramble
-    *     ids and force a full rewrite every time.
-    *  2. RE-ASSIGNS list-locally: one narrow corpus scan computes each
-    *     vector's refined assignment (12-byte rows through the join —
-    *     codes are NOT recomputed, the PQ codebooks stay frozen); a
-    *     list rebalances only when the fraction of its members moving
-    *     out exceeds `driftThreshold` (per-list stats are an nLists-row
-    *     collect). Rows in below-threshold lists stay put — bounded
-    *     staleness in exchange for bounded rewrite, the compaction
-    *     trade. At the default threshold 0 every drifted row moves and
-    *     the rewritten content is IDENTICAL to a fresh [[annIndex]]
-    *     build under the refined model (AnnSpec pins it).
-    *  3. REWRITES only affected partitions (drifted sources + their
-    *     movers' targets) via dynamic partition overwrite, dropping
-    *     fully-drained list dirs — the [[annCompactStored]] mechanics.
-    *
-    * Requires a list_id-partitioned index whose rows all have a live
-    * embedding in `emb` (compact tombstones first — the inner join drops
-    * stored rows without a vector, which would silently shrink the
-    * index). Returns (refined model, affected list ids, dropped list
-    * ids); serve with the REFINED model afterwards — probing with the
-    * old centroids against the rebalanced layout mismatches. */
-  def annRebalance(s: SparkSession, indexPath: String, emb: DataFrame,
-      model: AnnModel, lloydIters: Int = 3, fitSampleCap: Long = 200000L,
-      driftThreshold: Double = 0.0): (AnnModel, Seq[Int], Seq[Int]) = {
-    VectorOps.registerFns(s)
-    import graft.Stage.StagedOps
-    require(Option(new java.io.File(localPath(indexPath)).listFiles())
-        .exists(_.exists(f =>
-          f.isDirectory && f.getName.startsWith("list_id="))),
-      s"annRebalance expects a list_id-partitioned index at $indexPath")
-    require(driftThreshold >= 0.0 && driftThreshold < 1.0,
-      s"driftThreshold must be in [0, 1), got $driftThreshold")
-    // Bounded refinement sample (the fitAnnModel admission pattern).
-    val sample =
-      if (graft.plans.PlanStats.estRows(emb, 16L) <= BigInt(fitSampleCap))
-        emb
-      else {
-        val actual = emb.count()
-        if (actual <= fitSampleCap) emb
-        else {
-          val f = (actual + fitSampleCap - 1) / fitSampleCap
-          emb.filter(pmod(xxhash64(col("vec_id")), lit(f)) === 0).staged
-        }
-      }
-    val refined = ClusterOps.kmeansFit(s,
-        sample.select(col("vec_id"), col("embedding")),
-        k = model.nLists, iters = lloydIters,
-        init = Some(model.centroids.toArray))._2.sortBy(_._1).toSeq
-    val newModel = model.copy(centroids = refined)
-    val stored = s.read.parquet(indexPath)
-    val newAssign = emb.select(col("vec_id"),
-      listAssignExpr(newModel).as("new_list"))
-    val joined = stored.join(newAssign, Seq("vec_id"))
-    // Per-list out-drift: an nLists-row frame, driver-bounded collect.
-    val drift = joined.groupBy("list_id").agg(
-        count(lit(1)).as("n"),
-        count(when(col("new_list") =!= col("list_id"), 1)).as("moved"))
-      .collect()
-      .map(r => (r.getInt(0), r.getLong(1), r.getLong(2)))
-    val drifted = drift.filter { case (_, n, moved) =>
-      moved.toDouble / n > driftThreshold
-    }.map(_._1).toSet
-    if (drifted.isEmpty) return (newModel, Nil, Nil)
-    val targets = joined
-      .filter(col("list_id").isin(drifted.toSeq: _*) &&
-        col("new_list") =!= col("list_id"))
-      .select(col("new_list")).distinct()
-      .collect().map(_.getInt(0)).toSet
-    val affected = (drifted ++ targets).toSeq.sorted
-    // Rewritten content: movers (from drifted lists) land in new_list;
-    // everything else in an affected partition keeps its list. Material-
-    // ized before the overwrite deletes the files it reads (the
-    // annCompactStored self-overwrite rule).
-    val rewritten = joined
-      .filter(col("list_id").isin(affected: _*))
-      .withColumn("out_list",
-        when(col("list_id").isin(drifted.toSeq: _*) &&
-          col("new_list") =!= col("list_id"), col("new_list"))
-          .otherwise(col("list_id")))
-      .select(col("vec_id"), col("codes"), col("out_list").as("list_id"))
-      .localCheckpoint(true)
-    val kept = rewritten.select("list_id").distinct()
-      .collect().map(_.getInt(0)).toSet
-    val emptied = affected.filterNot(kept)
-    val prev = s.conf.getOption("spark.sql.sources.partitionOverwriteMode")
-    s.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try rewritten.write.mode("overwrite").partitionBy("list_id")
-      .parquet(indexPath)
-    finally prev match {
-      case Some(v) => s.conf.set("spark.sql.sources.partitionOverwriteMode", v)
-      case None => s.conf.unset("spark.sql.sources.partitionOverwriteMode")
-    }
-    emptied.foreach { lid =>
-      val dir = new java.io.File(localPath(indexPath), s"list_id=$lid")
-      if (dir.isDirectory) {
-        dir.listFiles().foreach(_.delete()); dir.delete()
-      }
-    }
-    (newModel, affected, emptied)
-  }
-
-  /** K4-lifecycle — the declared churn-repair rung: model fit on the
-    * stable 90 % of the corpus, the remaining tenth upserted under the
-    * frozen model (the drift), then [[annRebalance]] refines centroids
-    * and re-assigns drifted lists. Output = the rebalanced index, flat-
-    * rendered like [[annIndexBuild]]. No-oracle (learned quantizer, K2
-    * precedent); AnnSpec pins content ≡ fresh-assignment under the
+  /** K4-lifecycle — the declared churn-repair rung, run on the
+    * snapshot-isolated log: [[AnnIndexLog.build]] over the stable 90 %
+    * of the corpus under a model fit on it, the remaining tenth
+    * [[AnnIndexLog.upsert]]ed under the frozen model (the drift), then
+    * [[AnnIndexLog.rebalance]] refines the centroids and re-assigns the
+    * drifted lists. Output = the postings at the rebalanced snapshot,
+    * flat-rendered like [[annIndexBuild]]. No-oracle (learned quantizer,
+    * K2 precedent); AnnLogSpec pins content ≡ fresh assignment under the
     * refined model + the recall-recovery churn sequence; the Verify
     * selfcheck re-proves content equivalence every run. */
   val annRebalanceIvf = Q.noOracle("ann_rebalance_ivf") { (s, dir) =>
-    val emb = t(s, dir, "embeddings")
-    val hist = emb.filter(col("vec_id") % 10 =!= 0)
-    val model = fitAnnModel(s, hist)
-    val idxDir = java.nio.file.Files
-      .createTempDirectory("graft_ann_rebalance").toString
-    ivfUpsert(s, annIndex(s, hist, model),
-        emb.filter(col("vec_id") % 10 === 0), model)
-      .write.mode("overwrite").partitionBy("list_id").parquet(idxDir)
-    val (_, _, _) = annRebalance(s, idxDir, emb, model)
-    s.read.parquet(idxDir)
+    val (idxDir, r) = rebalancedChurnLog(s, t(s, dir, "embeddings"))
+    AnnIndexLog.postings(s, idxDir, r)
       .select(col("vec_id"), col("list_id"),
         concat_ws(",", col("codes").cast("array<string>")).as("pq_codes"))
       .orderBy("vec_id")
+  }
+
+  /** The [[annRebalanceIvf]] churn sequence on a fresh scratch log:
+    * returns the index directory and its resolved rebalanced snapshot
+    * (whose model is the refined one). Shared with the Verify
+    * selfcheck, which compares the snapshot to a fresh build under
+    * that model. */
+  private[graft] def rebalancedChurnLog(s: SparkSession,
+      emb: DataFrame): (String, AnnIndexLog.Resolved) = {
+    val hist = emb.filter(col("vec_id") % 10 =!= 0)
+    val idxDir = graft.ScratchDir.create("graft_ann_rebalance")
+    AnnIndexLog.build(s, idxDir, hist, fitAnnModel(s, hist))
+    AnnIndexLog.upsert(s, idxDir, emb.filter(col("vec_id") % 10 === 0))
+    AnnIndexLog.rebalance(s, idxDir, emb)
+    (idxDir, AnnIndexLog.resolve(s, idxDir))
   }
 
   /** Incremental index maintenance (VERDICT r6 item 8 — the ANN analogue
@@ -1883,8 +1687,7 @@ object AnnOps {
     (s, dir) =>
       val emb = t(s, dir, "embeddings")
       val model = fitAnnModel(s, emb)
-      val idxDir = java.nio.file.Files
-        .createTempDirectory("graft_annlog_serve").toString
+      val idxDir = graft.ScratchDir.create("graft_annlog_serve")
       AnnIndexLog.build(s, idxDir, emb, model)
       AnnIndexLog.serveIvfKnn(s, idxDir, emb, queryId = 0L, k = 20,
         nProbe = 3)

@@ -19,10 +19,22 @@ import graft.plans.PlanStats
   *
   * Modes:
   *   gen <outDir> <n> <dims>      — write <outDir>/embeddings.parquet
+  *   int8gen <outDir> <n> <dims>  — write the affine-int8 form of the same
+  *                                  corpus (the float form never lands)
   *   guard <dir>                  — print guard inputs + taken branch
   *   recall <dir> <dims>          — LSH vs forced-exact top-100 pair recall
   *   knn <dir> <dims>             — IVF/PQ kNN recall@20 vs exact, 5 queries
+  *   pqcurve <dir> <dims>         — PQ recall vs candidate-pool size
   *   crossover <dir> <repl,...>   — exact vs LSH time at 2k×repl vectors
+  *   lshtime <dir> <dims>         — LSH top-100 pairs wall alone
+  *   similarity <dir> <dims>      — the declared top-k pairs operator wall
+  *   annscale <dir> <dims> <n,...>  — stored-index build + serve ladder
+  *   batchserve <dir> <dims> <n> <q>  — batched vs per-query IVF+PQ serve
+  *   batchchunk <dir> <dims> <n> <q> [cmp] [float|int8]
+  *                                — chunked batch serve, optional payload
+  *   int8knn <dir> <dims> <n> <q> — int8-stored serve recall vs exact float
+  *   filtered <dir> <dims> <n> <pct,...>  — predicate-filtered serve recall
+  *   hybridbatch <dir> <dims> <q> [idx]   — batched hybrid BM25+ANN serve
   */
 object HighDimProbe {
 
@@ -573,133 +585,6 @@ object HighDimProbe {
     }
   }
 
-  /** Churn-repair rung (round-14, VERDICT r13 item 2's missing 2 M-tier
-    * measurement): the model fits on the 64-cluster base corpus, then a
-    * churn batch lands that is ONE NOVEL topic region (center the model
-    * never saw — the realistic drift shape: new data concentrates on new
-    * topics). Under the frozen model the whole region crams into the few
-    * nearest old lists: list sizes skew, and every probe touching the
-    * bloated lists scans their full ADC volume. [[AnnOps.annRebalance]]
-    * refines the centroids on the live corpus and splits the region;
-    * the rung measures recall, serve wall, probed-candidate volume and
-    * list skew before/after, with a fresh full fit+build as the ceiling. */
-  private def rebalanceChurn(s: SparkSession, dir: String, dims: Int,
-      n: Long, megaCluster: Boolean = false): Unit = {
-    import org.apache.spark.sql.expressions.Window
-    import s.implicits._
-    val hist = emb(s, dir).filter(col("vec_id") < n)
-    VectorOps.registerFns(s)
-    val nLists = math.max(8, math.sqrt(n / 1000.0).toInt)
-    val nProbe = math.max(3, nLists / 8)
-    // Novel-topic churn batch: n/8 vectors across EIGHT centers the base
-    // generator never used (base-cluster density). `megaCluster` instead
-    // plants ALL n/8 rows on ONE center — the adversarial tie-dense
-    // region that defeated the FIXED n/50 candidate pool for ANY model
-    // (recall 0.21–0.30 measured round-14) and motivated the adaptive
-    // probed-volume pool; the flag re-measures that exact shape.
-    val nNovel = if (megaCluster) 1 else 8
-    val churn = s.range(n, n + n / 8, 1, 32).as[Long].mapPartitions { it =>
-      it.map { id =>
-        val novel = (999983L + (id % nNovel) * 104729L) * 7919L
-        val v = new Array[Float](dims)
-        var d = 0
-        while (d < dims) {
-          v(d) = (u(novel, d) + 0.35 * u(id + 1000003L, d)).toFloat
-          d += 1
-        }
-        (id, v.toSeq)
-      }
-    }.toDF("vec_id", "embedding")
-    val e = hist.unionByName(churn) // the live corpus after churn
-    val (model, tFit) = time {
-      AnnOps.fitAnnModel(s, hist, nLists = nLists, m = dims / 8,
-        dsub = 8, ksub = 16)
-    }
-    val idxPath = s"/tmp/graft_annscale_rebal_$n"
-    val (_, tUpsert) = time {
-      AnnOps.ivfUpsert(s, AnnOps.annIndex(s, hist, model), churn, model)
-        .write.mode("overwrite").partitionBy("list_id").parquet(idxPath)
-    }
-    // Queries from the churned region; ground truth = exact cosine
-    // top-20 over the live corpus (one windowed pass for all queries).
-    val qids = (n until n + 5L)
-    val queries = e.filter(col("vec_id").isin(qids: _*))
-      .select(col("vec_id").as("query_id"), col("embedding").as("qe"))
-    val exactRows = e.crossJoin(broadcast(queries))
-      .filter(col("vec_id") =!= col("query_id"))
-      .select(col("query_id"), col("vec_id"),
-        round(call_function("cosine_sim", col("embedding"), col("qe")), 6)
-          .as("sim"))
-      .withColumn("rank", row_number().over(Window
-        .partitionBy("query_id").orderBy(col("sim").desc, col("vec_id"))))
-      .filter(col("rank") <= 20)
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
-    // Tie-aware quality floor per query: the exact 20th-best sim. In a
-    // dense novel region the rank-20 boundary is a near-tie across
-    // thousands of candidates, so id-overlap recall is a lottery; the
-    // serve exact-reranks its pool, so "returned sim ≥ true 20th sim"
-    // counts every as-good-as-kth answer — the standard recall-with-ties.
-    val kthSim = exactRows.groupBy(_._1).map { case (q, rs) =>
-      q -> rs.map(_._3).min
-    }
-    // Per-model serve health: tie-aware recall@20, wall, the
-    // ADC-candidate volume the probed lists force the serve to scan (the
-    // cost churn actually inflates), and list-size skew.
-    val qVecs = queries.collect()
-      .map(r => (r.getLong(0), r.getSeq[Float](1).toArray))
-    def health(m: AnnOps.AnnModel, path: String, label: String): Double = {
-      val stored = s.read.parquet(path)
-        .select("vec_id", "list_id", "codes")
-      val sizes = stored.groupBy("list_id").count().collect()
-        .map(r => r.getInt(0) -> r.getLong(1)).toMap
-      val probedRows = qVecs.map { case (_, qv) =>
-        m.centroids.map { case (cid, c) =>
-          (cid, c.zip(qv).map { case (x, y) => x * y.toDouble }.sum)
-        }.sortBy(-_._2).take(nProbe).map(x => sizes.getOrElse(x._1, 0L)).sum
-      }
-      def serveOnce() =
-        AnnOps.ivfPqKnnBatch(s, e, stored, m, queries, k = 20,
-            nProbe = nProbe)
-          .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
-      val got = serveOnce() // warm-up (page cache + codegen)
-      val tServe = Seq.fill(2)(time(serveOnce())._2).min
-      val rec = got.count { case (q, _, sim) =>
-        sim >= kthSim(q) - 1e-9
-      }.toDouble / (kthSim.size * 20)
-      println(f"[rebalance] $label recall@20=$rec%.3f serve=$tServe%.1fs " +
-        f"probed_rows/query=${probedRows.sum / probedRows.length} " +
-        f"list_max=${sizes.values.max} " +
-        f"list_mean=${sizes.values.sum / sizes.size}")
-      rec
-    }
-    val recChurned = health(model, idxPath, "churned   ")
-    // Production threshold (0.05): only lists whose OUT-drift exceeds 5%
-    // rewrite — threshold 0 is the spec's fresh-build-equivalence mode
-    // and rewrites every slightly-perturbed list (measured: 25/44
-    // affected, costing more than a fresh rebuild at this tier).
-    val ((refined, affected, emptied), tRebal) = time {
-      AnnOps.annRebalance(s, idxPath, e, model, driftThreshold = 0.05)
-    }
-    val recRebalanced = health(refined, idxPath, "rebalanced")
-    // Ceiling: fresh fit + build over the full live corpus.
-    val (freshModel, tFreshFit) = time {
-      AnnOps.fitAnnModel(s, e, nLists = nLists, m = dims / 8,
-        dsub = 8, ksub = 16)
-    }
-    val freshPath = s"/tmp/graft_annscale_rebal_fresh_$n"
-    val (_, tFreshBuild) = time {
-      AnnOps.annIndex(s, e, freshModel)
-        .write.mode("overwrite").partitionBy("list_id").parquet(freshPath)
-    }
-    val recFresh = health(freshModel, freshPath, "fresh     ")
-    println(f"[rebalance] n=$n dims=$dims nLists=$nLists nProbe=$nProbe " +
-      f"fit=$tFit%.1fs upsert=$tUpsert%.1fs " +
-      f"recall_churned=$recChurned%.3f " +
-      f"rebalance=$tRebal%.1fs affected=${affected.size} " +
-      f"emptied=${emptied.size} recall_rebalanced=$recRebalanced%.3f " +
-      f"fresh=${tFreshFit + tFreshBuild}%.1fs recall_fresh=$recFresh%.3f")
-  }
-
   /** Batched hybrid-serve rung (round-14, VERDICT r13 item 8's missing
     * 2 M-tier s/query): BM25 lexical arm over the replica documents +
     * batched IVF+PQ vector arm + min-max fusion in ONE plan, vs the
@@ -790,81 +675,6 @@ object HighDimProbe {
       f"sample_mismatches=$mism rows=${batchRows.length}")
   }
 
-  private def filteredDebug(s: SparkSession, dir: String, dims: Int,
-      n: Long, pct: Int): Unit = {
-    val e = emb(s, dir).filter(col("vec_id") < n)
-    VectorOps.registerFns(s)
-    val nLists = math.max(8, math.sqrt(n / 1000.0).toInt)
-    val model = AnnOps.fitAnnModel(s, e, nLists = nLists, m = dims / 8,
-      dsub = 8, ksub = 16)
-    val idxPath = partIdxPath(n, dims, nLists, model.m)
-    val stored = s.read.parquet(idxPath).select("vec_id", "list_id", "codes")
-    val attrs = e.select(col("vec_id"),
-      pmod(col("vec_id"), lit(100)).cast("int").as("label"))
-    val pred = col("label") < pct
-    val qid = 0L
-    val q = e.filter(col("vec_id") === qid)
-      .select(col("embedding").as("qe"))
-    val qVec = q.collect().head.getSeq[Float](0)
-    // exact filtered top-20 with their list ids
-    val exact = e.join(attrs.filter(pred).select("vec_id"),
-        Seq("vec_id"), "left_semi")
-      .filter(col("vec_id") =!= qid)
-      .crossJoin(broadcast(q))
-      .select(col("vec_id"),
-        round(call_function("cosine_sim", col("embedding"), col("qe")), 6)
-          .as("sim"))
-      .orderBy(col("sim").desc, col("vec_id")).limit(20)
-      .join(stored.select("vec_id", "list_id"), Seq("vec_id"))
-      .collect().map(r => (r.getLong(0), r.getDouble(1), r.getInt(2)))
-    println(s"[dbg] exact top-20 lists: ${exact.map(_._3).toSeq.sorted
-      .groupBy(identity).view.mapValues(_.size).toMap}")
-    val centroids = model.centroids
-    val ranked = centroids.map { case (cid, c) =>
-      (cid, c.zip(qVec).map { case (x, y) => x * y.toDouble }.sum)
-    }.sortBy(-_._2).map(_._1)
-    println(s"[dbg] probe ranking (first 12): ${ranked.take(12)}")
-    val got = AnnOps.ivfPqKnnFilteredBatch(s, e, stored, attrs, pred,
-        model, e.filter(col("vec_id") === qid)
-          .select(col("vec_id").as("query_id"), col("embedding").as("qe")),
-        k = 20, nProbe = math.max(3, nLists / 8))
-      .collect().map(_.getLong(1)).toSet
-    println(s"[dbg] got=${got.size} hits=${exact.count(x => got(x._1))}" +
-      s" missed=${exact.filterNot(x => got(x._1)).map(x =>
-        (x._1, x._2, x._3)).mkString(", ")}")
-    // ADC rank autopsy: where do the exact top-20 sit in the ADC order
-    // the pool cut uses? (pq_adc_lut + pq_adc — the batch-serve kernels.)
-    val cbFlat = (0 until model.m).flatMap(mm => (0 until model.ksub)
-      .flatMap(j => model.codebooks(mm)(j).padTo(model.dsub, 0.0)))
-    val probeSet = ranked.take(math.max(3, nLists / 8))
-    val adcAll = stored.filter(col("list_id").isin(probeSet: _*))
-      .filter(col("vec_id") =!= qid)
-      .crossJoin(broadcast(q.select(
-        call_function("pq_adc_lut", col("qe"), typedLit(cbFlat),
-          lit(model.m), lit(model.dsub), lit(model.ksub)).as("lut"))))
-      .select(col("vec_id"),
-        call_function("pq_adc", col("codes"), col("lut"),
-          lit(model.m), lit(model.ksub)).as("adc"))
-    val total = adcAll.count()
-    val interesting = exact.map(_._1).toSet
-    import org.apache.spark.sql.expressions.Window
-    val rankedAdc = adcAll.withColumn("r", row_number().over(
-        Window.orderBy(col("adc").desc, col("vec_id"))))
-      .filter(col("vec_id").isin(interesting.toSeq: _*))
-      .collect().map(r => (r.getLong(0), r.getDouble(1), r.getInt(2)))
-    val stats = adcAll.agg(max("adc"), min("adc"),
-      expr("percentile_approx(adc, 0.98)")).collect().head
-    println(s"[dbg] adc candidates=$total max=${stats.get(0)} " +
-      s"min=${stats.get(1)} p98=${stats.get(2)}")
-    val est = graft.plans.PlanStats.estRows(stored, 20L + model.m * 4L,
-      decompressionFactor = 1)
-    println(s"[dbg] estRows(stored)=$est pool=${AnnOps.pqPoolFor(dims, est)}" +
-      s" actualRows=${stored.count()}")
-    println(s"[dbg] exact-top20 adc ranks: " +
-      rankedAdc.sortBy(_._3).map(x => s"${x._1}@${x._3}(adc=${x._2})")
-        .mkString(", "))
-  }
-
   def main(args: Array[String]): Unit = {
     val s = session()
     try args(0) match {
@@ -882,18 +692,9 @@ object HighDimProbe {
       case "filtered" =>
         filteredServe(s, args(1), args(2).toInt, args(3).toLong,
           args(4).split(",").toSeq.map(_.toInt))
-      case "rebalance" =>
-        rebalanceChurn(s, args(1), args(2).toInt, args(3).toLong,
-          megaCluster = args.lift(4).contains("mega"))
       case "hybridbatch" =>
         hybridBatch(s, args(1), args(2).toInt, args(3).toInt,
           useInvIndex = args.lift(4).contains("idx"))
-      case "filtereddebug" =>
-        // Isolate probe-miss vs pool-miss for one selectivity: where do
-        // the exact filtered top-20 live (list ids), are those lists
-        // probed, and at what ADC rank do the misses sit?
-        filteredDebug(s, args(1), args(2).toInt, args(3).toLong,
-          args(4).toInt)
       case "annscale" =>
         annScale(s, args(1), args(2).toInt,
           args(3).split(",").toSeq.map(_.toLong))

@@ -483,245 +483,6 @@ class AnnSpec extends SparkSpec {
     assert(chunked == float)
   }
 
-  // --- delete/tombstone/compaction lifecycle (round-13, VERDICT r12 #1) ---
-
-  private def flatIdx(df: org.apache.spark.sql.DataFrame): Seq[(Long, Int, String)] =
-    df.select($"vec_id", $"list_id", concat_ws(",", $"codes"))
-      .collect().map(r => (r.getLong(0), r.getInt(1), r.getString(2)))
-      .toSeq.sortBy(t => (t._1, t._2))
-
-  test("delete lifecycle: masked serve == compacted serve == survivor " +
-      "rebuild; deleted ids never returned") {
-    val model = AnnOps.fitAnnModel(spark, emb)
-    val dir = "/tmp/graft_ann_delete_spec"
-    AnnOps.annIndex(spark, emb, model)
-      .write.mode("overwrite").partitionBy("list_id").parquet(dir)
-    val tombs = emb.select($"vec_id").filter($"vec_id" % 3 === 1)
-    val deleted = tombs.collect().map(_.getLong(0)).toSet
-    val stored = spark.read.parquet(dir).select("vec_id", "list_id", "codes")
-    // One explicit pool shared by all three serves (the masked path pins
-    // its default to the UNMASKED index estimate for exactly this reason;
-    // an explicit value removes the estimate from the equivalence).
-    val pool = 200
-    val masked = AnnOps.ivfPqKnnFromIndexMasked(spark, emb, stored, tombs,
-      model, queryId = 0L, k = 20, nProbe = 3, nCandidates = pool)
-      .collect().toSeq
-    assert(masked.nonEmpty)
-    assert(masked.forall(r => !deleted(r.getLong(0))),
-      "a tombstoned vector must never be returned")
-    val (affected, emptied) = AnnOps.annCompactStored(spark, dir, tombs)
-    assert(affected.nonEmpty && emptied.isEmpty)
-    val compacted = spark.read.parquet(dir)
-      .select("vec_id", "list_id", "codes")
-    assert(compacted.join(tombs, Seq("vec_id")).count() == 0,
-      "compaction must physically remove tombstoned rows")
-    val compactedServe = AnnOps.ivfPqKnnFromIndex(spark, emb, compacted,
-      model, queryId = 0L, k = 20, nProbe = 3, nCandidates = pool)
-      .collect().toSeq
-    assert(masked == compactedServe,
-      "masked serve must equal the post-compaction serve")
-    // Post-compaction content == fresh build over survivors, same model.
-    val rebuilt = AnnOps.annIndex(spark,
-      emb.filter($"vec_id" % 3 =!= 1), model)
-    assert(flatIdx(compacted) == flatIdx(rebuilt),
-      "compacted index must be row-identical to a survivor rebuild")
-    val rebuiltServe = AnnOps.ivfPqKnnFromIndex(spark, emb, rebuilt, model,
-      queryId = 0L, k = 20, nProbe = 3, nCandidates = pool)
-      .collect().toSeq
-    assert(compactedServe == rebuiltServe)
-    // Declared key: same shape, no deleted id, deterministic.
-    val a = AnnOps.annDeleteIvf.fn(spark, sfDir).collect().toSeq
-    val b = AnnOps.annDeleteIvf.fn(spark, sfDir).collect().toSeq
-    assert(a == b && a.nonEmpty)
-    assert(a.forall(r => r.getLong(0) % 3 != 1))
-  }
-
-  test("batched-masked serve == per-query masked serve at the same pool") {
-    val model = AnnOps.fitAnnModel(spark, emb)
-    val index = AnnOps.annIndex(spark, emb, model)
-    val tombs = emb.select($"vec_id").filter($"vec_id" % 3 === 1)
-    val deleted = tombs.collect().map(_.getLong(0)).toSet
-    val queries = emb.filter($"vec_id" < 5 && $"vec_id" % 3 =!= 1)
-      .select($"vec_id".as("query_id"), $"embedding".as("qe"))
-    val qids = queries.select("query_id").collect().map(_.getLong(0)).toSeq
-    val pool = 100
-    val batched = AnnOps.ivfPqKnnBatchMasked(spark, emb, index, tombs,
-      model, queries, k = 10, nProbe = 3, nCandidates = pool)
-      .collect()
-    assert(batched.forall(r => !deleted(r.getLong(1))),
-      "a tombstoned vector must never be returned from the batched serve")
-    val byQ = batched.groupBy(_.getLong(0))
-    qids.foreach { qid =>
-      val single = AnnOps.ivfPqKnnFromIndexMasked(spark, emb, index, tombs,
-        model, queryId = qid, k = 10, nProbe = 3, nCandidates = pool)
-        .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
-      assert(byQ(qid).sortBy(_.getLong(3))
-        .map(r => (r.getLong(1), r.getDouble(2))).toSeq == single)
-    }
-  }
-
-  test("annCompactStored refuses a flat (unpartitioned) index layout") {
-    val model = AnnOps.fitAnnModel(spark, emb)
-    val dir = "/tmp/graft_ann_compact_flat_spec"
-    AnnOps.annIndex(spark, emb, model).write.mode("overwrite").parquet(dir)
-    val e = intercept[IllegalArgumentException] {
-      AnnOps.annCompactStored(spark, dir, emb.select($"vec_id").limit(1))
-    }
-    assert(e.getMessage.contains("list_id-partitioned"))
-  }
-
-  test("compaction is list-local: unaffected partitions byte-untouched, " +
-      "a fully-deleted list's directory is dropped") {
-    val model = AnnOps.fitAnnModel(spark, emb)
-    val dir = "/tmp/graft_ann_compact_spec"
-    AnnOps.annIndex(spark, emb, model)
-      .write.mode("overwrite").partitionBy("list_id").parquet(dir)
-    val stored = spark.read.parquet(dir)
-    // Tombstone EVERY vector of one list: that list must empty out and
-    // its directory disappear; every other list must not be rewritten.
-    val victim = stored.groupBy("list_id").count()
-      .orderBy($"count", $"list_id").head.getInt(0)
-    // Materialized, not a lazy plan over the index files — compaction
-    // overwrites those files, and a tombstone frame still reading them
-    // would fail after the rewrite (a real delete queue is its own table).
-    val tombs = stored.filter($"list_id" === victim).select("vec_id")
-      .as[Long].collect().toSeq.toDF("vec_id")
-    def files(): Map[String, (Long, Long)] =
-      new java.io.File(dir).listFiles().filter(_.isDirectory)
-        .flatMap(_.listFiles()).filter(_.getName.endsWith(".parquet"))
-        .map(f => f.getPath -> (f.length(), f.lastModified())).toMap
-    val before = files()
-    val (affected, emptied) = AnnOps.annCompactStored(spark, dir, tombs)
-    assert(affected == Seq(victim) && emptied == Seq(victim))
-    assert(!new java.io.File(dir, s"list_id=$victim").exists(),
-      "fully-deleted list directory must be dropped")
-    val after = files()
-    val untouched = before.filterNot(_._1.contains(s"list_id=$victim"))
-    assert(after == untouched,
-      "unaffected list partitions must not be rewritten")
-    // Remaining content == survivor rebuild under the same model.
-    val survivors = emb.join(tombs, Seq("vec_id"), "left_anti")
-    assert(flatIdx(spark.read.parquet(dir)
-        .select("vec_id", "list_id", "codes")) ==
-      flatIdx(AnnOps.annIndex(spark, survivors, model)))
-  }
-
-  /** Deterministic drift fixture for the rebalance tests: the initial
-    * corpus is two tight 16-d clusters (A = even ids, B = odd); the churn
-    * batch lands ON THE A/B BOUNDARY (midpoint + noise wide enough to
-    * straddle it), so under the stale model its members split between the
-    * two stale lists and a 1-probe serve can only ever see half of a
-    * churn query's true neighborhood. */
-  private def driftVec(kind: Int, i: Int): Seq[Float] = {
-    def a(d: Int) = math.sin(d * 1.7 + 0.3)
-    def b(d: Int) = math.sin(d * 2.3 + 4.1)
-    (0 until 16).map { d =>
-      val center = kind match {
-        case 0 => a(d)
-        case 1 => b(d)
-        case _ => (a(d) + b(d)) / 2.0
-      }
-      val amp = if (kind == 2) 0.25 else 0.1
-      (center + amp * math.sin(i * 31.7 + d * 3.3 + kind)).toFloat
-    }
-  }
-
-  test("rebalance under churn: boundary-straddling upserts degrade the " +
-      "1-probe serve, rebalance recovers it to fresh-build level, and the " +
-      "rebalanced content == fresh assignment under the refined model") {
-    val initial = (0 until 200).map(i => (i.toLong, driftVec(i % 2, i)))
-      .toDF("vec_id", "embedding")
-    val churn = (0 until 200).map(i => ((1000 + i).toLong, driftVec(2, i)))
-      .toDF("vec_id", "embedding")
-    val full = initial.unionByName(churn)
-    val model = AnnOps.fitAnnModel(spark, initial, nLists = 4,
-      m = 2, dsub = 8, ksub = 16)
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft_ann_rebalance_spec").toString
-    AnnOps.ivfUpsert(spark, AnnOps.annIndex(spark, initial, model),
-        churn, model)
-      .write.mode("overwrite").partitionBy("list_id").parquet(dir)
-    val qids = Seq(1000L, 1037L, 1101L, 1150L, 1199L)
-    def exactTop(qid: Long): Set[Long] = full
-      .filter($"vec_id" =!= qid)
-      .crossJoin(broadcast(full.filter($"vec_id" === qid)
-        .select($"embedding".as("qe"))))
-      .select($"vec_id",
-        round(call_function("cosine_sim", $"embedding", $"qe"), 6).as("sim"))
-      .orderBy($"sim".desc, $"vec_id").limit(10)
-      .collect().map(_.getLong(0)).toSet
-    def recallAt(m: graft.operators.AnnOps.AnnModel): Double = {
-      val stored = spark.read.parquet(dir)
-        .select("vec_id", "list_id", "codes")
-      qids.map { qid =>
-        val got = AnnOps.ivfPqKnnFromIndex(spark, full, stored, m,
-          qid, k = 10, nProbe = 1).collect().map(_.getLong(0)).toSet
-        val want = exactTop(qid)
-        got.intersect(want).size.toDouble / want.size
-      }.sum / qids.size
-    }
-    val recallStale = recallAt(model)
-    val (newModel, affected, _) =
-      AnnOps.annRebalance(spark, dir, full, model, lloydIters = 5)
-    assert(affected.nonEmpty, "boundary churn must drift some list")
-    val recallRebalanced = recallAt(newModel)
-    // Fresh-build baseline: a from-scratch model on the full corpus.
-    val fresh = AnnOps.fitAnnModel(spark, full, nLists = 4,
-      m = 2, dsub = 8, ksub = 16)
-    val freshDir = java.nio.file.Files
-      .createTempDirectory("graft_ann_fresh_spec").toString
-    AnnOps.annIndex(spark, full, fresh)
-      .write.mode("overwrite").partitionBy("list_id").parquet(freshDir)
-    val recallFresh = {
-      val stored = spark.read.parquet(freshDir)
-        .select("vec_id", "list_id", "codes")
-      qids.map { qid =>
-        val got = AnnOps.ivfPqKnnFromIndex(spark, full, stored, fresh,
-          qid, k = 10, nProbe = 1).collect().map(_.getLong(0)).toSet
-        val want = exactTop(qid)
-        got.intersect(want).size.toDouble / want.size
-      }.sum / qids.size
-    }
-    info(s"recall stale=$recallStale rebalanced=$recallRebalanced fresh=$recallFresh")
-    assert(recallRebalanced > recallStale,
-      s"rebalance must improve the degraded serve: " +
-        s"stale=$recallStale rebalanced=$recallRebalanced")
-    assert(recallRebalanced >= recallFresh - 0.1,
-      s"rebalanced recall must reach fresh-build level: " +
-        s"rebalanced=$recallRebalanced fresh=$recallFresh")
-    // Content law (threshold 0): rebalanced index == fresh assignment of
-    // the full corpus under the REFINED model (codes frozen).
-    assert(flatIdx(spark.read.parquet(dir)
-        .select("vec_id", "list_id", "codes")) ==
-      flatIdx(AnnOps.annIndex(spark, full, newModel)))
-  }
-
-  test("rebalance is list-local and threshold-gated: an above-threshold " +
-      "gate on a stable corpus is a no-op with zero file churn") {
-    val stable = (0 until 200).map(i => (i.toLong, driftVec(i % 2, i)))
-      .toDF("vec_id", "embedding")
-    val model = AnnOps.fitAnnModel(spark, stable, nLists = 4,
-      m = 2, dsub = 8, ksub = 16)
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft_ann_rebalance_noop").toString
-    AnnOps.annIndex(spark, stable, model)
-      .write.mode("overwrite").partitionBy("list_id").parquet(dir)
-    def files(): Map[String, (Long, Long)] =
-      new java.io.File(dir).listFiles().filter(_.isDirectory)
-        .flatMap(_.listFiles()).filter(_.getName.endsWith(".parquet"))
-        .map(f => f.getPath -> (f.length(), f.lastModified())).toMap
-    val before = files()
-    // A 90 % drift gate on an already-converged corpus: Lloyd refinement
-    // barely moves the centroids, no list crosses the gate, nothing is
-    // rewritten — the cheap periodic-maintenance invocation.
-    val (newModel, affected, emptied) = AnnOps.annRebalance(spark, dir,
-      stable, model, lloydIters = 2, driftThreshold = 0.9)
-    assert(affected.isEmpty && emptied.isEmpty)
-    assert(files() == before, "a gated no-op must not touch any file")
-    assert(newModel.centroids.map(_._1) == model.centroids.map(_._1),
-      "refinement must preserve centroid ids")
-  }
-
   test("probe widening law: identity at sel=1, 1/sel growth, nLists clamp, " +
       "nProbe floor, monotone non-increasing in selectivity") {
     assert(AnnOps.widenedProbe(3, 8, 1.0) == 3)

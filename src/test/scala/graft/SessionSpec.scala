@@ -36,12 +36,14 @@ class SessionSpec extends SparkSpec {
     val src = Files.walk(root).iterator.asScala
       .filter(p => Files.isRegularFile(p) && p.toString.endsWith(".scala"))
       .map(p => new String(Files.readAllBytes(p), UTF_8)).mkString("\n")
-    def keys(re: String) = re.r.findAllMatchIn(src).map(_.group(1)).toSet
-    val set = keys("""(?:\.config|conf\.set)\(\s*"(spark\.[^"]+)"""") ++
-      Bench.sessionConf.map(_._1)
-    assert(set.contains("spark.sql.session.timeZone") &&
-      set.contains("spark.sql.sources.partitionOverwriteMode"),
-      s"the scan missed a .config or a conf.set call: $set")
+    def keys(re: String, in: String = src) =
+      re.r.findAllMatchIn(in).map(_.group(1)).toSet
+    val setCall = """(?:\.config|conf\.set)\(\s*"(spark\.[^"]+)""""
+    val set = keys(setCall) ++ Bench.sessionConf.map(_._1)
+    assert(set.contains("spark.sql.session.timeZone"),
+      s"the scan missed a .config call: $set")
+    assert(keys(setCall, """s.conf.set("spark.sql.x", "1")""") ==
+      Set("spark.sql.x"), "the scan must also see conf.set calls")
     val read = keys(
       """(?:conf\.get|confOpt)\([^")]*"(spark\.graft\.[^"]+)"""")
     val unknown = set.filterNot(k =>
@@ -61,7 +63,7 @@ class SessionSpec extends SparkSpec {
         "[floor] job_best_ms=1.2 job_med_ms=2.5 sql_best_ms=10.0 sql_med_ms=12.0")
       val line = Bench.jsonLine(Seq("q1_pricing_summary" -> 0.25,
         "anti_join" -> -1.0, "set_ops" -> 0.5), 1.23, 2.5, 10.04, 12.0,
-        "/data/sf0.1")
+        "/data/sf0.1", cpus = 4)
       val json = new com.fasterxml.jackson.databind.ObjectMapper()
         .readTree(line)
       assert(json.get("metric").asText == "total")
@@ -71,6 +73,7 @@ class SessionSpec extends SparkSpec {
       assert(Seq("job_best_ms", "job_med_ms", "sql_best_ms", "sql_med_ms")
         .map(k => f.get(k).asDouble) == Seq(1.2, 2.5, 10.0, 12.0))
       assert(json.get("sf").asText == "/data/sf0.1")
+      assert(json.get("cpus").asInt == 4)
     } finally Locale.setDefault(saved)
   }
 
