@@ -1,8 +1,12 @@
 package graft.pipeline
 
 import graft.sources.{DocumentSink, TableSource}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import java.util.concurrent.TimeoutException
+import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
+import org.apache.spark.sql.functions.{count, lit}
 import org.apache.spark.sql.streaming.StreamingQuery
+import scala.concurrent.Await
+import scala.concurrent.duration._
 
 /** The trireme shape as a composable pipeline: scan a source system,
   * transform rows to search documents, bulk-load a sink — with batch and
@@ -22,14 +26,20 @@ final case class Migration(
 
 object Pipeline {
 
-  /** Batch run: load → transform → save. Returns rows written. */
+  /** How long a run waits for a row count observed on the sink's pass.
+    * Observations complete through Spark's asynchronous listener bus,
+    * normally within milliseconds of the pass; a sink that never ran its
+    * frame leaves the count unset, and the run recounts after this wait. */
+  private val ObservedWait = 2.seconds
+
+  /** Batch run: load → transform → save, executing the transform once.
+    * Returns rows written, counted by an `Observation` on the frame the
+    * sink runs; only a sink that never runs its frame costs a recount. */
   def run(spark: SparkSession, m: Migration): Long = {
     val out = m.transform(m.source.load(spark, m.sourceConf))
-    m.sink.save(out, m.sinkConf)
-    // Row count re-runs the (lazy) lineage — acceptable for a migration
-    // report; callers needing exact written-row metrics at scale should
-    // read the sink's own commit stats instead of recomputing.
-    out.count()
+    val (observed, rows) = observeCount(out)
+    m.sink.save(observed, m.sinkConf)
+    countOf(rows, out)
   }
 
   /** Batch run with a dead-letter channel — the migration-tool contract
@@ -37,7 +47,8 @@ object Pipeline {
     * diverted row stays accounted for. Rows failing `isValid` are written
     * (raw, untransformed) to `deadLetterPath` for replay after repair;
     * valid rows proceed through transform → sink. Returns
-    * (rows written, rows diverted).
+    * (rows written, rows diverted), each observed on the pass that wrote
+    * the rows, as in [[run]].
     *
     * The canonical `isValid` for file ingest is
     * `col("_corrupt_record").isNull` over a PERMISSIVE-mode read
@@ -50,18 +61,28 @@ object Pipeline {
       isValid: org.apache.spark.sql.Column,
       deadLetterPath: String): (Long, Long) = {
     val src = m.source.load(spark, m.sourceConf).cache()
-    val out = m.transform(src.filter(isValid)).cache()
     try {
       val bad = src.filter(!isValid)
-      bad.write.mode("append").parquet(deadLetterPath)
-      // Count from the pinned transform output BEFORE unpersisting, so the
-      // reported metric is the exact batch the sink received — never a
-      // recomputation that could rescan the source (or disagree under a
-      // nondeterministic transform).
-      m.sink.save(out, m.sinkConf)
-      (out.count(), bad.count())
-    } finally { out.unpersist(); src.unpersist() }
+      val (observedBad, badRows) = observeCount(bad)
+      observedBad.write.mode("append").parquet(deadLetterPath)
+      val out = m.transform(src.filter(isValid))
+      val (observed, rows) = observeCount(out)
+      m.sink.save(observed, m.sinkConf)
+      (countOf(rows, out), countOf(badRows, bad))
+    } finally src.unpersist()
   }
+
+  /** `df` with a fresh row-count observation attached. */
+  private def observeCount(df: DataFrame): (DataFrame, Observation) = {
+    val rows = Observation()
+    (df.observe(rows, count(lit(1)).as("rows")), rows)
+  }
+
+  /** The count `rows` observed, or `df.count()` when no pass ran the
+    * observed frame within [[ObservedWait]]. */
+  private def countOf(rows: Observation, df: DataFrame): Long =
+    try Await.result(rows.future, ObservedWait).getLong(0)
+    catch { case _: TimeoutException => df.count() }
 
   /** Micro-batch run: the same transform applied incrementally, one bulk
     * sink commit per micro-batch (the Solr indexing shape, I7). The caller

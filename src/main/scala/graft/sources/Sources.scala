@@ -1,7 +1,9 @@
 package graft.sources
 
 import graft.Tables
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, GraftSqlBridge, Row, SaveMode, SparkSession}
+import org.apache.spark.sql.catalyst.plans.logical.{CollectMetrics, Filter,
+  LogicalPlan, Project, Sort}
 import org.apache.spark.sql.types.StructType
 
 /** SURVEY §1.4: the external-system seam.
@@ -18,8 +20,10 @@ trait TableSource {
 }
 
 trait DocumentSink {
-  /** Persist a DataFrame. Must be idempotent per (batch, epoch) to be safe
-    * under streaming retries. */
+  /** Persist a DataFrame, running it once: `Pipeline.run` counts the rows
+    * written from that pass, so a second action over `df` is wasted work.
+    * Must be idempotent per (batch, epoch) to be safe under streaming
+    * retries. */
   def save(df: DataFrame, conf: Map[String, String]): Unit
 }
 
@@ -95,6 +99,10 @@ object CassandraSource extends TableSource {
   *    retries and foreachBatch replays (the DocumentSink contract).
   *  - **Commit discipline**: ONE visibility commit after the load (the
   *    commitWithin shape), never per-batch hard commits.
+  *  - **No row order**: an upsert by the unique key makes the index
+  *    independent of the order documents arrive in, so a global sort at the
+  *    top of the frame is dropped before the load (see [[unordered]]) and
+  *    no order of batches or of documents within one is promised.
   */
 abstract class BulkDocumentSink extends DocumentSink with Serializable {
   /** Fail here (driver-side, pre-job) when the transport cannot run. */
@@ -119,15 +127,32 @@ abstract class BulkDocumentSink extends DocumentSink with Serializable {
         s"frame columns ${df.schema.fieldNames.mkString("[", ",", "]")}")
     requireTransport()
     val batchSize = conf.getOrElse("batchSize", "1000").toInt
-    val fields = df.schema.fieldNames.toSeq
-    df.foreachPartition { (rows: Iterator[org.apache.spark.sql.Row]) =>
+    val fields = df.schema.fieldNames.zipWithIndex
+    unordered(df).foreachPartition { (rows: Iterator[Row]) =>
       rows.grouped(batchSize).foreach { g =>
         addBatch(collection, idField,
-          g.map(r => fields.zipWithIndex
-            .map { case (f, i) => f -> r.get(i) }.toMap))
+          g.map(r => fields.iterator.map { case (f, i) => f -> r.get(i) }.toMap))
       }
     }
     commit(collection)
+  }
+
+  /** `df` without the global sort at the top of its analyzed plan, found
+    * through `Project`, `Filter` and `CollectMetrics` only: any other node
+    * may give the order a meaning (a `Limit` over a `Sort` keeps its top
+    * k), so the walk stops there and `df` is returned as it is. The sort
+    * costs a range-sampling job and a shuffle, and the upsert by the unique
+    * key cannot see the order. `CollectMetrics` keeps its `dataframeId`,
+    * so an observation attached to `df` still completes. */
+  private def unordered(df: DataFrame): DataFrame = {
+    def strip(p: LogicalPlan): Option[LogicalPlan] = p match {
+      case s: Sort if s.global => Some(s.child)
+      case _: Project | _: Filter | _: CollectMetrics =>
+        strip(p.children.head).map(c => p.withNewChildren(Seq(c)))
+      case _ => None
+    }
+    strip(GraftSqlBridge.analyzed(df))
+      .fold(df)(GraftSqlBridge.ofRows(df.sparkSession, _))
   }
 }
 

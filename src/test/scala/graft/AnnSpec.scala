@@ -139,7 +139,7 @@ class AnnSpec extends SparkSpec {
     // written to and re-read from parquet, yields byte-identical IVF and
     // PQ answers to the fused build-per-query pipelines.
     val model = AnnOps.fitAnnModel(spark, emb)
-    val dir = "/tmp/graft_ann_index_spec"
+    val dir = ScratchDir.create("graft_ann_index_spec")
     AnnOps.annIndex(spark, emb, model)
       .write.mode("overwrite").parquet(dir)
     val stored = spark.read.parquet(dir)
@@ -162,7 +162,7 @@ class AnnSpec extends SparkSpec {
   test("composed IVF+PQ: full probe == flat ADC scan; pruned probe keeps " +
       "recall; declared twin matches the stored-index serve") {
     val model = AnnOps.fitAnnModel(spark, emb)
-    val dir = "/tmp/graft_ann_ivfpq_spec"
+    val dir = ScratchDir.create("graft_ann_ivfpq_spec")
     AnnOps.annIndex(spark, emb, model).write.mode("overwrite").parquet(dir)
     val stored = spark.read.parquet(dir)
     // The equivalence contract: probing ALL lists restricts nothing, so
@@ -195,7 +195,7 @@ class AnnSpec extends SparkSpec {
   test("composed serve over a list_id-PARTITIONED stored index: the probe " +
       "filter is partition pruning (unprobed lists never read)") {
     val model = AnnOps.fitAnnModel(spark, emb)
-    val dir = "/tmp/graft_ann_ivfpq_part_spec"
+    val dir = ScratchDir.create("graft_ann_ivfpq_part_spec")
     // The 100 TB layout: the stored index hive-partitioned on list_id —
     // the probe filter then prunes DIRECTORIES, not rows.
     AnnOps.annIndex(spark, emb, model)
@@ -205,7 +205,7 @@ class AnnSpec extends SparkSpec {
     val served = AnnOps.ivfPqKnnFromIndex(spark, emb, stored, model,
       queryId = 0L, k = 20, nProbe = 3)
     // Same answer as the unpartitioned layout.
-    val flatDir = "/tmp/graft_ann_ivfpq_part_spec_flat"
+    val flatDir = ScratchDir.create("graft_ann_ivfpq_part_spec_flat")
     AnnOps.annIndex(spark, emb, model).write.mode("overwrite").parquet(flatDir)
     val fromFlat = AnnOps.ivfPqKnnFromIndex(spark, emb,
       spark.read.parquet(flatDir), model, queryId = 0L, k = 20, nProbe = 3)
@@ -252,8 +252,7 @@ class AnnSpec extends SparkSpec {
     val model = AnnOps.fitAnnModel(spark, hist)
     // Production shape: the stored index is a TABLE on disk, not a plan —
     // the upsert must work from the persisted rows alone.
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft_ivf_upsert").toString
+    val dir = ScratchDir.create("graft_ivf_upsert")
     AnnOps.annIndex(spark, hist, model).write.mode("overwrite").parquet(dir)
     val stored = spark.read.parquet(dir)
     val upserted = AnnOps.ivfUpsert(spark, stored, batch, model)
@@ -421,7 +420,7 @@ class AnnSpec extends SparkSpec {
     // p_vec from the index files — and the serve must never scan the
     // corpus table at all (the whole point: a list-pruned index scan
     // prunes the rerank with it).
-    val dir = java.nio.file.Files.createTempDirectory("graft_pidx").toString
+    val dir = ScratchDir.create("graft_pidx")
     pf.write.mode("overwrite").partitionBy("list_id")
       .parquet(s"$dir/idx")
     val storedPf = spark.read.parquet(s"$dir/idx")

@@ -34,8 +34,7 @@ class Bm25IndexSpec extends SparkSpec {
   }
 
   test("stored parquet round-trip of index + norms is identical") {
-    val tmp = java.nio.file.Files
-      .createTempDirectory("graft_bm25idx").toString
+    val tmp = ScratchDir.create("graft_bm25idx")
     CurationOps3.invertedIndex(docs)
       .write.mode("overwrite").parquet(s"$tmp/inv")
     CorpusOps.docNorms(docs)

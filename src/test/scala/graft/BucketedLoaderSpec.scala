@@ -14,8 +14,7 @@ class BucketedLoaderSpec extends SparkSpec {
 
   /** Temp corpus with orders/lineitem copied from sfDir. */
   private lazy val dir: String = {
-    val d = java.nio.file.Files
-      .createTempDirectory("graft_bucket_loader").toString
+    val d = ScratchDir.create("graft_bucket_loader")
     Seq("orders", "lineitem").foreach { n =>
       spark.read.schema(Tables.schemas(n)).parquet(s"$sfDir/$n.parquet")
         .write.mode("overwrite").parquet(s"$d/$n.parquet")
@@ -71,8 +70,7 @@ class BucketedLoaderSpec extends SparkSpec {
 
   test("a same-name same-size same-mtime regeneration with different " +
       "CONTENT invalidates the copy (fingerprint content sample, round-11)") {
-    val d = java.nio.file.Files
-      .createTempDirectory("graft_bucket_content").toString
+    val d = ScratchDir.create("graft_bucket_content")
     Seq("orders", "lineitem").foreach { n =>
       spark.read.schema(Tables.schemas(n)).parquet(s"$sfDir/$n.parquet")
         .write.mode("overwrite").parquet(s"$d/$n.parquet")

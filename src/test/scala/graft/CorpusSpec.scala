@@ -32,7 +32,7 @@ class CorpusSpec extends SparkSpec {
       (1L, "hash hash hash hash hash pad pad pad"),
       (2L, "hash pad pad pad pad pad pad pad"),
       (3L, "pad pad pad pad pad pad pad pad")).toDF("doc_id", "text")
-    val tmp = s"/tmp/graft_bm25_spec_${System.nanoTime()}"
+    val tmp = ScratchDir.create("graft_bm25_spec")
     docs.write.parquet(s"$tmp/documents.parquet")
     val out = CorpusOps.bm25TopK.fn(spark, tmp).collect()
     val byId = out.map(r => r.getLong(0) -> r.getDouble(1)).toMap
@@ -65,7 +65,7 @@ class CorpusSpec extends SparkSpec {
     val docs = Seq(
       (1L, "spam spam spam spam spam spam spam spam"),
       (2L, "one two three four five six seven eight")).toDF("doc_id", "text")
-    val tmp = s"/tmp/graft_rep_spec_${System.nanoTime()}"
+    val tmp = ScratchDir.create("graft_rep_spec")
     docs.write.parquet(s"$tmp/documents.parquet")
     val out = CorpusOps.textRepetition.fn(spark, tmp).collect()
       .map(r => r.getLong(0) -> (r.getDouble(1), r.getDouble(2))).toMap
@@ -76,7 +76,7 @@ class CorpusSpec extends SparkSpec {
 
   test("repetition degenerate docs yield NULL, not crash or Inf") {
     val docs = Seq((1L, ""), (2L, "solo")).toDF("doc_id", "text")
-    val tmp = s"/tmp/graft_rep0_spec_${System.nanoTime()}"
+    val tmp = ScratchDir.create("graft_rep0_spec")
     docs.write.parquet(s"$tmp/documents.parquet")
     val out = CorpusOps.textRepetition.fn(spark, tmp).collect()
     assert(out.forall(_.isNullAt(1)), "0 bigrams => NULL dup fraction")
@@ -136,7 +136,7 @@ class CorpusSpec extends SparkSpec {
       // user 3: view then purchase with no click -> purchase must not count
       (3L, ts(1), "view"), (3L, ts(5), "purchase"))
       .toDF("user_id", "ts", "event_type")
-    val tmp = s"/tmp/graft_funnel_spec_${System.nanoTime()}"
+    val tmp = ScratchDir.create("graft_funnel_spec")
     ev.write.parquet(s"$tmp/events.parquet")
     val r = EventsOps.eventsFunnel.fn(spark, tmp).collect().head
     assert(r.getLong(0) == 3 && r.getLong(1) == 1 && r.getLong(2) == 1)
@@ -151,7 +151,7 @@ class CorpusSpec extends SparkSpec {
       (1L, d(20), "view"), // outside the 0..7 window
       (2L, d(2), "view"))
       .toDF("user_id", "ts", "event_type")
-    val tmp = s"/tmp/graft_ret_spec_${System.nanoTime()}"
+    val tmp = ScratchDir.create("graft_ret_spec")
     ev.write.parquet(s"$tmp/events.parquet")
     val rows = EventsOps.eventsRetention.fn(spark, tmp).collect()
       .map(r => (r.getDate(0).toString, r.getInt(1), r.getLong(2))).toSeq
@@ -163,7 +163,7 @@ class CorpusSpec extends SparkSpec {
     val ev = (Seq.fill(20)(("a", 10.0)) ++ Seq(("a", 1000.0)) ++
       (1 to 9).map(i => ("b", i.toDouble)))
       .toDF("event_type", "value")
-    val tmp = s"/tmp/graft_mad_spec_${System.nanoTime()}"
+    val tmp = ScratchDir.create("graft_mad_spec")
     ev.write.parquet(s"$tmp/events.parquet")
     val out = EventsOps.eventsAnomalyMad.fn(spark, tmp).collect()
       .map(r => r.getString(0) -> ((r.getLong(1), r.getLong(2)))).toMap

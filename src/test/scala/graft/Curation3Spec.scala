@@ -80,7 +80,7 @@ class Curation3Spec extends SparkSpec {
   test("phraseMatchFromIndex: parquet round-trip of the positional index " +
     "answers identically to the inline build") {
     val docs = Tables.load(spark, sfDir, "documents")
-    val path = "/tmp/graft_test_posidx"
+    val path = ScratchDir.create("graft_test_posidx")
     CurationOps3.positionalPostings(docs)
       .write.mode("overwrite").parquet(path)
     val stored = CurationOps3.phraseMatchFromIndex(

@@ -35,8 +35,7 @@ class LayoutContractSpec extends SparkSpec {
   }
 
   test("all three physical layouts of the same rows load identically") {
-    val base = java.nio.file.Files
-      .createTempDirectory("graft_layout").toString
+    val base = ScratchDir.create("graft_layout")
     val usEpoch = 1704067200000000L // 2024-01-01T00:00:00Z in µs
     val rows = (1L to 100L).map(i => (i, usEpoch + i * 1000000L, i % 7,
       "view", 1.0, "{}"))

@@ -22,7 +22,7 @@ class NearDupIngestSpec extends SparkSpec {
   private val doc9 = "fresh content entirely new subject matter here nine"
 
   private def tmp(prefix: String): String =
-    java.nio.file.Files.createTempDirectory(prefix).toString
+    ScratchDir.create(prefix)
 
   private def writeFeed(feed: String, name: String,
       rows: Seq[(Long, String)]): Unit =

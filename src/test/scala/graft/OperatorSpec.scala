@@ -171,7 +171,7 @@ class OperatorSpec extends SparkSpec {
       (11L, t0, 1L, "click", 1.0, "{}"),
       (12L, t0 + 3600L * 1000000000L, 1L, "purchase", 1.0, "{}"))
       .toDF("event_id", "ts", "user_id", "event_type", "value", "props")
-    val tmp = s"/tmp/graft_scd2_tie_${System.nanoTime()}"
+    val tmp = ScratchDir.create("graft_scd2_tie")
     ev.write.parquet(s"$tmp/events.parquet")
     val out = graft.operators.TableOps.scd2Intervals.fn(spark, tmp).collect()
       .map(r => (r.getString(1), r.getTimestamp(2),

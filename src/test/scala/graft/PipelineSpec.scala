@@ -4,7 +4,6 @@ import graft.operators.DocAssembly
 import graft.pipeline.{Migration, Pipeline}
 import graft.sources.{ParquetSink, ParquetSource}
 import graft.streaming.Streams
-import java.nio.file.Files
 import org.apache.spark.sql.functions._
 import scala.jdk.CollectionConverters._
 
@@ -13,7 +12,7 @@ import scala.jdk.CollectionConverters._
 class PipelineSpec extends SparkSpec {
 
   test("batch migration: customer table -> search documents -> sink") {
-    val out = Files.createTempDirectory("graft_migr").toString + "/docs"
+    val out = ScratchDir.create("graft_migr") + "/docs"
     val m = Migration(
       source = ParquetSource,
       sourceConf = Map("dir" -> sfDir, "table" -> "customer"),
@@ -32,7 +31,7 @@ class PipelineSpec extends SparkSpec {
   }
 
   test("dead-letter channel: malformed CSV rows divert, load completes") {
-    val base = Files.createTempDirectory("graft_dlq").toString
+    val base = ScratchDir.create("graft_dlq")
     // 3 valid rows, 2 malformed (non-numeric id / truncated line).
     java.nio.file.Files.write(java.nio.file.Paths.get(s"$base/in.csv"),
       ("id,name,score\n1,alpha,10.5\nnot_a_number,beta,2.0\n" +
@@ -59,14 +58,14 @@ class PipelineSpec extends SparkSpec {
   }
 
   test("declared solr_doc_assembly output feeds the sink unchanged") {
-    val out = Files.createTempDirectory("graft_migr2").toString + "/docs"
+    val out = ScratchDir.create("graft_migr2") + "/docs"
     val docs = DocAssembly.solrDocAssembly.fn(spark, sfDir)
     ParquetSink.save(docs, Map("path" -> out))
     assert(spark.read.parquet(out).count() == docs.count())
   }
 
   test("streaming migration: events stream -> transform -> per-batch sink") {
-    val feed = Files.createTempDirectory("graft_migr_feed").toString
+    val feed = ScratchDir.create("graft_migr_feed")
     Tables.load(spark, sfDir, "events")
       .limit(500).coalesce(1).write.parquet(s"$feed/f0")
     val d = new java.io.File(feed)
@@ -76,7 +75,7 @@ class PipelineSpec extends SparkSpec {
       }
       sub.listFiles().foreach(_.delete()); sub.delete()
     }
-    val outDir = Files.createTempDirectory("graft_migr_out").toString
+    val outDir = ScratchDir.create("graft_migr_out")
     var batches = 0
     val sunk = scala.collection.mutable.ArrayBuffer.empty[Long]
     val m = Migration(
@@ -92,7 +91,7 @@ class PipelineSpec extends SparkSpec {
       sinkConf = Map.empty)
     val q = Pipeline.runStreaming(
       Streams.eventsStream(spark, feed),
-      m, Files.createTempDirectory("graft_ckpt_migr").toString)
+      m, ScratchDir.create("graft_ckpt_migr"))
     q.awaitTermination()
     assert(batches >= 1 && sunk.sum == 500, s"batches=$batches rows=${sunk.sum}")
   }
@@ -222,6 +221,108 @@ class PipelineSpec extends SparkSpec {
     intercept[NoSuchElementException] {
       src.load(spark, Map("table" -> "customers")) // keyspace required
     }
+  }
+
+  // ----------------------------------------------------------------------
+  // One execution per run: the written-row count is observed on the sink's
+  // own pass, and the upsert-by-id sink drops a global sort it cannot see.
+  // A non-deterministic UDF that bumps an accumulator counts how many rows
+  // the transform evaluated.
+  // ----------------------------------------------------------------------
+
+  /** A sorted customer transform whose id column counts its evaluations. */
+  private def tallied(seen: org.apache.spark.util.LongAccumulator)
+      : org.apache.spark.sql.DataFrame => org.apache.spark.sql.DataFrame = {
+    val tally = udf { (id: Long) => seen.add(1); id }.asNondeterministic()
+    df => df.select(tally(col("c_custkey")).cast("string").as("id"),
+      col("c_name").as("name_s")).orderBy("id")
+  }
+
+  test("a bulk-sink run evaluates the transform once per row") {
+    FakeSolr.reset()
+    val seen = spark.sparkContext.longAccumulator("transform_rows")
+    val m = Migration(
+      source = new FakeCassandraSource(tokenRanges = 3),
+      sourceConf = Map("keyspace" -> "shop", "table" -> "customers"),
+      transform = tallied(seen),
+      sink = new FakeSolrSink,
+      sinkConf = Map("collection" -> "once", "batchSize" -> "64"))
+    val n = Pipeline.run(spark, m)
+    assert(n == 150 && FakeSolr.indexSize("once") == 150)
+    assert(seen.value == n, s"transform evaluated ${seen.value} rows for $n")
+    assert(FakeSolr.commits.get() == 1)
+  }
+
+  test("a dead-letter run evaluates the transform once per valid row") {
+    FakeSolr.reset()
+    val base = ScratchDir.create("graft_dlq_once")
+    java.nio.file.Files.write(java.nio.file.Paths.get(s"$base/in.csv"),
+      ("c_custkey,c_name\n1,alpha\nnot_a_number,beta\n2,gamma\n3\n" +
+        "4,delta\n").getBytes("UTF-8"))
+    val seen = spark.sparkContext.longAccumulator("transform_rows_dlq")
+    val m = Migration(
+      source = graft.sources.CsvSource,
+      sourceConf = Map("path" -> s"$base/in.csv", "schema" ->
+        "c_custkey BIGINT, c_name STRING, _corrupt_record STRING"),
+      transform = tallied(seen),
+      sink = new FakeSolrSink,
+      sinkConf = Map("collection" -> "once_dlq"))
+    val (good, bad) = Pipeline.runWithDeadLetter(spark, m,
+      isValid = col("_corrupt_record").isNull, s"$base/dead")
+    assert(good == 3 && bad == 2, s"good=$good bad=$bad")
+    assert(FakeSolr.indexSize("once_dlq") == 3)
+    assert(seen.value == good, s"transform evaluated ${seen.value} rows for $good")
+  }
+
+  test("a sink that never runs its frame gets the right count back, " +
+      "after a bounded wait") {
+    val m = Migration(
+      source = ParquetSource,
+      sourceConf = Map("dir" -> sfDir, "table" -> "customer"),
+      transform = df => df.select(col("c_custkey").as("id")).orderBy("id"),
+      sink = new graft.sources.DocumentSink {
+        def save(df: org.apache.spark.sql.DataFrame,
+            conf: Map[String, String]): Unit = ()
+      },
+      sinkConf = Map.empty)
+    val t0 = System.nanoTime()
+    assert(Pipeline.run(spark, m) == 150)
+    val secs = (System.nanoTime() - t0) / 1e9
+    assert(secs < 30, s"run took $secs s")
+  }
+
+  test("a top-k transform keeps its order: exactly the top k ids reach " +
+      "the bulk sink") {
+    FakeSolr.reset()
+    val topK = (df: org.apache.spark.sql.DataFrame) =>
+      df.select(col("c_custkey").cast("string").as("id"),
+        col("c_acctbal").as("acctbal_d"))
+        .orderBy(col("acctbal_d").desc, col("id")).limit(7)
+    val m = Migration(
+      source = new FakeCassandraSource(tokenRanges = 3),
+      sourceConf = Map("keyspace" -> "shop", "table" -> "customers"),
+      transform = topK,
+      sink = new FakeSolrSink,
+      sinkConf = Map("collection" -> "topk", "batchSize" -> "4"))
+    assert(Pipeline.run(spark, m) == 7)
+    val want = topK(Tables.load(spark, sfDir, "customer"))
+      .collect().map(_.getString(0)).toSet
+    assert(want.size == 7)
+    assert(FakeSolr.docs("topk").map(_("id").toString).toSet == want)
+    assert(FakeSolr.batchSizes.asScala.map(_.toInt).sum == 7)
+  }
+
+  test("an empty frame migrates zero documents and returns 0") {
+    FakeSolr.reset()
+    val m = Migration(
+      source = new FakeCassandraSource(tokenRanges = 2),
+      sourceConf = Map("keyspace" -> "shop", "table" -> "customers"),
+      transform = df => df.filter(col("c_custkey") < 0)
+        .select(col("c_custkey").cast("string").as("id")).orderBy("id"),
+      sink = new FakeSolrSink,
+      sinkConf = Map("collection" -> "empty"))
+    assert(Pipeline.run(spark, m) == 0)
+    assert(FakeSolr.indexSize("empty") == 0 && FakeSolr.commits.get() == 1)
   }
 }
 

@@ -1,6 +1,5 @@
 package graft
 
-import java.nio.file.Files
 import org.apache.spark.sql.functions._
 
 /** Partition layout behaviors the single-file corpus can't show: static
@@ -11,7 +10,7 @@ class PruningSpec extends SparkSpec {
   import spark.implicits._
 
   private lazy val partedDir: String = {
-    val dir = Files.createTempDirectory("graft_parted").toString + "/events"
+    val dir = ScratchDir.create("graft_parted") + "/events"
     Tables.load(spark, sfDir, "events")
       .write.partitionBy("event_type").parquet(dir)
     dir
@@ -27,7 +26,7 @@ class PruningSpec extends SparkSpec {
   }
 
   test("dynamic partition pruning fires when the filter comes via a join") {
-    val dimDir = Files.createTempDirectory("graft_dim").toString + "/dim"
+    val dimDir = ScratchDir.create("graft_dim") + "/dim"
     Seq(("click", 1), ("purchase", 2), ("view", 3), ("signup", 4), ("error", 5))
       .toDF("et", "pri").write.parquet(dimDir)
     val joined = spark.read.parquet(partedDir)

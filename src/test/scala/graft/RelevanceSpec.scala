@@ -63,7 +63,7 @@ class RelevanceSpec extends SparkSpec {
       (1L, "hash pad pad pad"),
       (2L, "pad pad pad pad"),
       (3L, "filler words only here")).toDF("doc_id", "text")
-    val tmp = s"/tmp/graft_ndcg_spec_${System.nanoTime()}"
+    val tmp = ScratchDir.create("graft_ndcg_spec")
     docs.write.parquet(s"$tmp/documents.parquet")
     val out = RelevanceOps.relevanceNdcg.fn(spark, tmp).collect()
     val hash = out.find(_.getString(0) == "hash").get

@@ -165,7 +165,7 @@ class RewriteSpec extends SparkSpec {
     import spark.implicits._
     // createDataFrame → untrusted stats sentinel; route through parquet so
     // the gate sees real stats.
-    val tmp = s"/tmp/graft_bmneg_${System.nanoTime()}"
+    val tmp = ScratchDir.create("graft_bmneg") + "/t"
     Seq((1L, Some(-5L)), (1L, Some(-5L)), (1L, Some(3L)), (2L, Some(-1L)),
       (2L, Option.empty[Long]), (2L, Some(0L)))
       .toDF("k", "v").write.parquet(tmp)
@@ -205,7 +205,7 @@ class RewriteSpec extends SparkSpec {
     // col()/expr() re-spelling — the name-syntax gate must keep the
     // ORIGINAL count(distinct) aggregate (correct, just not rewritten)
     // instead of mis-resolving the spliced subtree.
-    val tmp = s"/tmp/graft_bmdot_${System.nanoTime()}"
+    val tmp = ScratchDir.create("graft_bmdot") + "/t"
     spark.range(100)
       .selectExpr("id % 3 AS `k.dotted`", "id % 7 AS `v``tick`")
       .write.parquet(tmp)

@@ -1,7 +1,6 @@
 package graft
 
 import graft.sources._
-import java.nio.file.Files
 
 /** Source/sink seam (SURVEY §1.4): exercisable implementations round-trip;
   * offline connector stubs fail loudly with the documented message. */
@@ -19,7 +18,7 @@ class SourcesSpec extends SparkSpec {
   }
 
   test("CSV and JSON sources round-trip through ParquetSink outputs") {
-    val tmp = Files.createTempDirectory("graft_src").toString
+    val tmp = ScratchDir.create("graft_src")
     val nation = Tables.load(spark, sfDir, "nation")
     nation.coalesce(1).write.option("header", "true").csv(s"$tmp/n_csv")
     nation.coalesce(1).write.json(s"$tmp/n_json")

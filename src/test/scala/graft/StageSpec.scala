@@ -16,8 +16,7 @@ class StageSpec extends SparkSpec {
     val localRes = operators.TextCluster
       .connectedComponents(docs.select(col("doc_id")), pairs)
       .orderBy("doc_id").collect().toSeq
-    val ckptDir = java.nio.file.Files
-      .createTempDirectory("graft_reliable_ckpt").toString
+    val ckptDir = ScratchDir.create("graft_reliable_ckpt")
     spark.sparkContext.setCheckpointDir(ckptDir)
     try {
       val reliableRes = operators.TextCluster

@@ -16,7 +16,7 @@ class StreamingSpec extends SparkSpec {
     * stream source's layout sniff reads them natively. (The synthetic
     * Long-ns feeds further down exercise the legacy-layout path.) */
   private def feedDir(nFiles: Int): String = {
-    val dir = Files.createTempDirectory("graft_stream_feed").toString
+    val dir = ScratchDir.create("graft_stream_feed")
     val raw = Tables.load(spark, sfDir, "events")
     (0 until nFiles).foreach { i =>
       raw.filter(pmod(col("event_id"), lit(nFiles)) === i)
@@ -30,7 +30,7 @@ class StreamingSpec extends SparkSpec {
     * Slicing runs on a µs-Long shadow column (approxQuantile needs a
     * numeric column); the written slices carry the timestamp ts. */
   private def feedDirChrono(nFiles: Int): String = {
-    val dir = Files.createTempDirectory("graft_stream_chrono").toString
+    val dir = ScratchDir.create("graft_stream_chrono")
     val raw = Tables.load(spark, sfDir, "events")
       .withColumn("tsu", unix_micros(col("ts")))
     val bounds = raw.stat.approxQuantile("tsu",
@@ -51,7 +51,7 @@ class StreamingSpec extends SparkSpec {
     * the disorder regime the sessionizer must absorb without emitting
     * phantom sessions. */
   private def feedDirDisordered(nFiles: Int): (String, Long) = {
-    val dir = Files.createTempDirectory("graft_stream_disord").toString
+    val dir = ScratchDir.create("graft_stream_disord")
     val raw = Tables.load(spark, sfDir, "events")
       .withColumn("tsu", unix_micros(col("ts")))
     val bounds = raw.stat.approxQuantile("tsu",
@@ -104,7 +104,7 @@ class StreamingSpec extends SparkSpec {
   }
 
   private def runToCompletion(out: DataFrame, mode: OutputMode): Seq[org.apache.spark.sql.Row] = {
-    val ckpt = Files.createTempDirectory("graft_ckpt").toString
+    val ckpt = ScratchDir.create("graft_ckpt")
     val sink = scala.collection.mutable.ArrayBuffer.empty[org.apache.spark.sql.Row]
     val q = out.writeStream
       .outputMode(mode)
@@ -247,7 +247,7 @@ class StreamingSpec extends SparkSpec {
     // arriving after that are dropped. (Update mode's late-drop is
     // documented best-effort — state for an evicted window can be
     // recreated — so it is not asserted here.)
-    val dir = Files.createTempDirectory("graft_late").toString
+    val dir = ScratchDir.create("graft_late")
     def mk(ids: Seq[Long], tsBase: Long) =
       ids.map(i => (i, tsBase + i * 1000000L, i % 3, "click", 1.0, "{}"))
         .toDF("event_id", "ts", "user_id", "event_type", "value", "props")
@@ -279,7 +279,7 @@ class StreamingSpec extends SparkSpec {
   }
 
   test("dropDuplicatesWithinWatermark removes replayed event ids") {
-    val dir = Files.createTempDirectory("graft_dup").toString
+    val dir = ScratchDir.create("graft_dup")
     val t0 = 1700000000L * 1000000000L
     val batch = (1L to 20L) ++ (1L to 20L) // every id twice
     batch.zipWithIndex.map { case (id, i) =>
@@ -332,7 +332,7 @@ class StreamingSpec extends SparkSpec {
   }
 
   test("streaming parquet file sink: append-mode windows land as files") {
-    val dir = Files.createTempDirectory("graft_fsink_feed").toString
+    val dir = ScratchDir.create("graft_fsink_feed")
     def mk(ids: Seq[Long], tsBase: Long) =
       ids.map(i => (i, tsBase + i * 1000000L, i % 3, "click", 1.0, "{}"))
         .toDF("event_id", "ts", "user_id", "event_type", "value", "props")
@@ -341,7 +341,7 @@ class StreamingSpec extends SparkSpec {
     mk(1L to 40L, t0).coalesce(1).write.parquet(s"$dir/a")
     mk(41L to 50L, t0 + 3 * hour).coalesce(1).write.parquet(s"$dir/b") // closes H1
     flatten(dir)
-    val sinkDir = Files.createTempDirectory("graft_fsink_out").toString
+    val sinkDir = ScratchDir.create("graft_fsink_out")
     val q = Streams.watermarkedCounts(
       Streams.eventsStream(spark, dir, maxFilesPerTrigger = 1), "10 minutes")
       .writeStream
@@ -349,7 +349,7 @@ class StreamingSpec extends SparkSpec {
       .outputMode(OutputMode.Append())
       .option("path", sinkDir)
       .option("checkpointLocation",
-        Files.createTempDirectory("graft_fsink_ckpt").toString)
+        ScratchDir.create("graft_fsink_ckpt"))
       .trigger(Trigger.AvailableNow())
       .start()
     q.awaitTermination()
@@ -474,7 +474,7 @@ class StreamingSpec extends SparkSpec {
     // the segments fold through IndexOps.mergeSegments. The result must
     // equal the one-shot batch build over the whole corpus.
     import graft.operators.{CurationOps3, IndexOps}
-    val dir = Files.createTempDirectory("graft_idx_feed").toString
+    val dir = ScratchDir.create("graft_idx_feed")
     val docs = Tables.load(spark, sfDir, "documents")
       .select($"doc_id", $"text")
     (0 until 3).foreach { i =>
@@ -482,8 +482,8 @@ class StreamingSpec extends SparkSpec {
         .coalesce(1).write.mode("overwrite").parquet(s"$dir/f$i")
     }
     val feed = flatten(dir)
-    val segDir = Files.createTempDirectory("graft_idx_segs").toString
-    val ckpt = Files.createTempDirectory("graft_idx_ckpt").toString
+    val segDir = ScratchDir.create("graft_idx_segs")
+    val ckpt = ScratchDir.create("graft_idx_ckpt")
     val q = Streams.foreachBatchSink(
       spark.readStream.schema(docs.schema)
         .option("maxFilesPerTrigger", 1).parquet(feed),
@@ -502,7 +502,7 @@ class StreamingSpec extends SparkSpec {
 
   test("streaming percolator matches the batch evaluation, append mode") {
     // Document feed: 4 micro-batch slices of the documents table.
-    val dir = Files.createTempDirectory("graft_doc_feed").toString
+    val dir = ScratchDir.create("graft_doc_feed")
     val docs = Tables.load(spark, sfDir, "documents")
       .select($"doc_id", $"text")
     (0 until 4).foreach { i =>
@@ -542,7 +542,7 @@ class StreamingSpec extends SparkSpec {
     spark.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", "false")
     try {
       import spark.implicits._
-      val dir = Files.createTempDirectory("graft_neardup_feed").toString
+      val dir = ScratchDir.create("graft_neardup_feed")
       val base = "the quick brown fox jumps over the lazy dog near dup corpus"
       // Batch 1: three distinct docs. Batch 2: doc 10 is a near-copy of
       // doc 1 (one token changed), doc 11 is unrelated — the (1, 10) pair
@@ -556,7 +556,7 @@ class StreamingSpec extends SparkSpec {
         .toDF("doc_id", "text").coalesce(1)
         .write.mode("overwrite").parquet(s"$dir/b1")
       // Flatten so the file source sees two files, one per micro-batch.
-      val flat = Files.createTempDirectory("graft_neardup_flat").toString
+      val flat = ScratchDir.create("graft_neardup_flat")
       new java.io.File(s"$dir/b0").listFiles.filter(_.getName.endsWith("parquet"))
         .foreach(f => Files.copy(f.toPath, java.nio.file.Paths.get(flat, "a_" + f.getName)))
       new java.io.File(s"$dir/b1").listFiles.filter(_.getName.endsWith("parquet"))

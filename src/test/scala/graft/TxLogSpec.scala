@@ -13,9 +13,9 @@ class TxLogSpec extends SparkSpec {
   import spark.implicits._
 
   private def fresh(name: String): String = {
-    val p = java.nio.file.Files.createTempDirectory(s"graft_txspec_$name")
-    java.nio.file.Files.delete(p) // create() wants to own the dir
-    p.toString
+    val p = ScratchDir.create(s"graft_txspec_$name")
+    java.nio.file.Files.delete(java.nio.file.Paths.get(p)) // create() wants to own the dir
+    p
   }
 
   private def orders = Tables.load(spark, sfDir, "orders")
@@ -162,8 +162,7 @@ class TxLogSpec extends SparkSpec {
     val tb = fresh("stream")
     TxLog.create(spark, tb, Tables.events, Some("event_id"))
     // 3-file feed of the events corpus (the StreamingSpec convention).
-    val feed = java.nio.file.Files
-      .createTempDirectory("graft_txlog_feed").toString
+    val feed = ScratchDir.create("graft_txlog_feed")
     val raw = Tables.load(spark, sfDir, "events")
     (0 until 3).foreach { i =>
       raw.filter(pmod($"event_id", lit(3)) === i)
@@ -183,8 +182,7 @@ class TxLogSpec extends SparkSpec {
         sub.listFiles().foreach(_.delete()); sub.delete()
       }
     }
-    val ckpt = java.nio.file.Files
-      .createTempDirectory("graft_txlog_ckpt").toString
+    val ckpt = ScratchDir.create("graft_txlog_ckpt")
     val stream = graft.streaming.Streams
       .eventsStream(spark, feed, maxFilesPerTrigger = 1)
     graft.streaming.Streams
@@ -295,7 +293,7 @@ class TxLogSpec extends SparkSpec {
       "live files (advice round-11)") {
     // input_file_name() percent-encodes the space; AddFile.path must be the
     // decoded OS path or every referenced file looks like an orphan.
-    val base = java.nio.file.Files.createTempDirectory("graft_txspec_sp")
+    val base = ScratchDir.create("graft_txspec_sp")
     val tb = s"$base/my tbl"
     TxLog.create(spark, tb, Tables.orders, Some("o_orderkey"))
     TxLog.append(spark, tb, orders.limit(100))
@@ -528,7 +526,7 @@ class TxLogSpec extends SparkSpec {
     TxLog.create(spark, tb, Tables.orders, Some("o_orderkey"))
     TxLog.append(spark, tb, orders.filter($"o_orderstatus" === "F")) // v1
     TxLog.append(spark, tb, orders.filter($"o_orderstatus" === "O")) // v2
-    val ckpt = java.nio.file.Files.createTempDirectory("graft_stream_ckpt")
+    val ckpt = ScratchDir.create("graft_stream_ckpt")
     val seen = java.util.concurrent.ConcurrentHashMap
       .newKeySet[(Long, Long)]() // (commit_version, o_orderkey)
     // Raw delivery COUNT alongside the set: the set dedups, so it only
@@ -539,7 +537,7 @@ class TxLogSpec extends SparkSpec {
       val q = spark.readStream.format("graftlog").option("path", tb).load()
         .select("_commit_version", "o_orderkey")
         .writeStream
-        .option("checkpointLocation", ckpt.toString)
+        .option("checkpointLocation", ckpt)
         .foreachBatch { (df: org.apache.spark.sql.DataFrame, _: Long) =>
           df.collect().foreach { r =>
             seen.add((r.getLong(0), r.getLong(1)))
@@ -575,7 +573,7 @@ class TxLogSpec extends SparkSpec {
     TxLog.deleteWhere(spark, tb, $"o_totalprice" > 100000)            // v4
     val err = intercept[org.apache.spark.sql.streaming.StreamingQueryException] {
       val q = spark.readStream.format("graftlog").option("path", tb).load()
-        .writeStream.option("checkpointLocation", ckpt.toString)
+        .writeStream.option("checkpointLocation", ckpt)
         .foreachBatch { (_: org.apache.spark.sql.DataFrame, _: Long) => () }
         .start()
       try q.processAllAvailable() finally q.stop()
@@ -688,8 +686,8 @@ class TxLogSpec extends SparkSpec {
       "o_orderkey bigint, o_custkey bigint, o_totalprice double"),
       Some("o_orderkey"))
     TxLog.append(spark, src, orders.filter($"o_orderstatus" === "F")) // v1
-    val ckpt = java.nio.file.Files.createTempDirectory("graft_pipe_ckpt")
-    def runPipe(checkpoint: String = ckpt.toString): Unit = {
+    val ckpt = ScratchDir.create("graft_pipe_ckpt")
+    def runPipe(checkpoint: String = ckpt): Unit = {
       val in = spark.readStream.format("graftlog").option("path", src).load()
       val out = in.filter($"o_totalprice" > 100000)
         .select($"o_orderkey", $"o_custkey", $"o_totalprice")
@@ -711,8 +709,8 @@ class TxLogSpec extends SparkSpec {
     // Restart-replay: a FRESH checkpoint re-delivers the full source as
     // replayed batch ids; the sink's (appId, batchId) high-water mark
     // turns every replay into a no-op — destination contents unchanged.
-    val ckpt2 = java.nio.file.Files.createTempDirectory("graft_pipe_ckpt2")
-    runPipe(ckpt2.toString)
+    val ckpt2 = ScratchDir.create("graft_pipe_ckpt2")
+    runPipe(ckpt2)
     assert(TxLog.snapshot(spark, dst).count() == expect("F", "O"),
       "replayed batches must not duplicate destination rows")
   }
@@ -759,8 +757,7 @@ class TxLogSpec extends SparkSpec {
     assert(price() == wantSum, "a replayed merge must not re-apply")
     // End-to-end through the streaming sink: a fresh checkpoint
     // re-delivers batch 0 — destination contents must not change.
-    val feed = java.nio.file.Files
-      .createTempDirectory("graft_mergesink_feed").toString
+    val feed = ScratchDir.create("graft_mergesink_feed")
     upd.coalesce(1).write.mode("overwrite").parquet(feed)
     def runSink(ckpt: String): Unit = {
       val in = spark.readStream.schema(TxLog.snapshot(spark, tb).schema)
@@ -770,8 +767,7 @@ class TxLogSpec extends SparkSpec {
     }
     // The sink's appId already has batchId 0 committed (the direct
     // mergeBatch above), so even the FIRST run's batch 0 is a replay.
-    runSink(java.nio.file.Files
-      .createTempDirectory("graft_mergesink_c1").toString)
+    runSink(ScratchDir.create("graft_mergesink_c1"))
     assert(price() == wantSum, "sink replay of batch 0 must be a no-op")
     // A different appId's batch 0 applies once — and only once across
     // a second restart-with-fresh-checkpoint.
@@ -785,11 +781,9 @@ class TxLogSpec extends SparkSpec {
       streaming.Streams.txLogMergeSink(spark, in, tb, "o_orderkey",
         ckpt, appId = "merge-app-2").awaitTermination()
     }
-    runSink2(java.nio.file.Files
-      .createTempDirectory("graft_mergesink_c2").toString)
+    runSink2(ScratchDir.create("graft_mergesink_c2"))
     assert(price() == want2)
-    runSink2(java.nio.file.Files
-      .createTempDirectory("graft_mergesink_c3").toString)
+    runSink2(ScratchDir.create("graft_mergesink_c3"))
     assert(price() == want2,
       "restart with a fresh checkpoint must not re-apply the merge")
   }
@@ -880,10 +874,8 @@ class TxLogSpec extends SparkSpec {
     TxLog.create(spark, dst, transform(orders.limit(0)).schema,
       Some("o_orderkey"))
     TxLog.addConstraint(spark, dst, "pos_revenue", "revenue > 0")
-    val dlq = java.nio.file.Files
-      .createTempDirectory("graft_soak_dlq").toString
-    val ckpt = java.nio.file.Files
-      .createTempDirectory("graft_soak_ckpt").toString
+    val dlq = ScratchDir.create("graft_soak_dlq")
+    val ckpt = ScratchDir.create("graft_soak_ckpt")
     def runOnce(checkpoint: String): Unit =
       streaming.Streams.txLogMergeSinkWithDeadLetter(spark,
         spark.readStream.format("graftlog").option("path", src).load()
@@ -937,8 +929,7 @@ class TxLogSpec extends SparkSpec {
     // exactly as they were.
     val contentsBefore = snap.orderBy("o_orderkey")
       .collect().map(_.toSeq).toSeq
-    runOnce(java.nio.file.Files
-      .createTempDirectory("graft_soak_ckpt2").toString)
+    runOnce(ScratchDir.create("graft_soak_ckpt2"))
     assert(TxLog.snapshot(spark, dst).orderBy("o_orderkey")
       .collect().map(_.toSeq).toSeq == contentsBefore,
       "crash-replay must not change the table")
@@ -1003,10 +994,8 @@ class TxLogSpec extends SparkSpec {
     val tb = fresh("deadletter")
     TxLog.create(spark, tb, Tables.orders, Some("o_orderkey"))
     TxLog.addConstraint(spark, tb, "pos_price", "o_totalprice > 0")
-    val feed = java.nio.file.Files
-      .createTempDirectory("graft_dl_feed").toString
-    val dlq = java.nio.file.Files
-      .createTempDirectory("graft_dl_out").toString
+    val feed = ScratchDir.create("graft_dl_feed")
+    val dlq = ScratchDir.create("graft_dl_out")
     val clean = orders.limit(120)
     val poison = orders.limit(150).filter($"o_orderkey" % 4 === 0)
       .withColumn("o_totalprice", -$"o_totalprice")
@@ -1015,7 +1004,7 @@ class TxLogSpec extends SparkSpec {
     val in1 = spark.readStream
       .schema(TxLog.snapshot(spark, tb).schema).parquet(feed)
     streaming.Streams.txLogSinkWithDeadLetter(spark, in1, tb,
-      java.nio.file.Files.createTempDirectory("graft_dl_c1").toString,
+      ScratchDir.create("graft_dl_c1"),
       appId = "dl-app", deadLetterDir = dlq).awaitTermination()
     val nClean = clean.count()
     val nPoison = poison.count()
@@ -1031,7 +1020,7 @@ class TxLogSpec extends SparkSpec {
     val in2 = spark.readStream
       .schema(TxLog.snapshot(spark, tb).schema).parquet(feed)
     streaming.Streams.txLogSinkWithDeadLetter(spark, in2, tb,
-      java.nio.file.Files.createTempDirectory("graft_dl_c2").toString,
+      ScratchDir.create("graft_dl_c2"),
       appId = "dl-app", deadLetterDir = dlq).awaitTermination()
     assert(TxLog.snapshot(spark, tb).count() == nClean)
     assert(spark.read.parquet(dlq).count() == nPoison)
@@ -1043,7 +1032,7 @@ class TxLogSpec extends SparkSpec {
     val in3 = spark.readStream
       .schema(TxLog.snapshot(spark, tb).schema).parquet(feed)
     streaming.Streams.txLogSinkWithDeadLetter(spark, in3, tb,
-      java.nio.file.Files.createTempDirectory("graft_dl_c3").toString,
+      ScratchDir.create("graft_dl_c3"),
       appId = "dl-app", deadLetterDir = dlq).awaitTermination()
     assert(TxLog.snapshot(spark, tb).count() == nClean,
       "replayed batch must still be idempotent after the constraint drop")

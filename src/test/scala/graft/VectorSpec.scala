@@ -92,8 +92,7 @@ class VectorSpec extends SparkSpec {
   test("minhash stored index: parquet round-trip pairs == direct pairs") {
     val docs = Tables.load(spark, sfDir, "documents")
     val direct = VectorOps.minhashPairs(docs, 32, 8, 0.4).collect().toSeq
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft_mh_idx").toString
+    val dir = ScratchDir.create("graft_mh_idx")
     VectorOps.minhashIndex(docs, 32).write.mode("overwrite").parquet(dir)
     val stored = VectorOps.minhashPairsFromIndex(
       spark.read.parquet(dir), 32, 8, 0.4).collect().toSeq

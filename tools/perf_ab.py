@@ -1,0 +1,102 @@
+#!/usr/bin/env python3
+"""Alternating A/B runs of the repo benchmark between two checkouts.
+
+    tools/perf_ab.py PARENT_DIR CHANGE_DIR --workload W --pairs N [--seconds S]
+
+Runs N pairs of `python3 perfbench/run.py --workload W --seed K --seconds S
+--trace 0`, each side in its own checkout. Both runs of a pair use the same
+seed K, drawn at random when the pair starts (never 1-3, the seeds the
+benchmark's own smoke runs use), so no seed is chosen in advance. The
+parent runs first in odd pairs and the change runs first in even ones, so a
+drift of the host's speed falls on both sides alike.
+
+Prints one line per run as it finishes, then per end-to-end metric each
+side's median and quartiles, the change's win count over the pairs and the
+gap between the medians next to the parent's interquartile range. The list
+of end-to-end metrics and whether each is better higher or lower are read
+from the change checkout's BENCHMARK.json. Every file a run writes stays in
+its checkout (`.perfbench/`); this script writes none itself.
+"""
+import argparse
+import json
+import os
+import random
+import statistics
+import subprocess
+import sys
+
+
+def run(checkout, workload, seed, seconds):
+    """One untraced run; its result object, or None when it printed none."""
+    cmd = [sys.executable, "perfbench/run.py", "--workload", workload,
+           "--seed", str(seed), "--seconds", str(seconds), "--trace", "0"]
+    p = subprocess.run(cmd, cwd=checkout, capture_output=True, text=True)
+    lines = p.stdout.strip().splitlines()
+    if p.returncode != 0 or not lines:
+        tail = "\n".join(p.stderr.strip().splitlines()[-5:])
+        print(f"run failed in {checkout} (exit {p.returncode}):\n{tail}",
+              file=sys.stderr, flush=True)
+        return None
+    return json.loads(lines[-1])
+
+
+def quartiles(xs):
+    if len(xs) < 2:
+        return xs[0], xs[0], xs[0]
+    q1, q2, q3 = statistics.quantiles(xs, n=4, method="inclusive")
+    return q1, q2, q3
+
+
+def main():
+    ap = argparse.ArgumentParser(description=__doc__.split("\n\n")[0])
+    ap.add_argument("parent", help="checkout of the parent commit")
+    ap.add_argument("change", help="checkout of the change")
+    ap.add_argument("--workload", required=True)
+    ap.add_argument("--pairs", type=int, required=True)
+    ap.add_argument("--seconds", type=float, default=15)
+    a = ap.parse_args()
+
+    with open(os.path.join(a.change, "BENCHMARK.json")) as f:
+        metrics = [(m["name"], m["better"]) for m in json.load(f)["end_to_end"]]
+    sides = {"parent": a.parent, "change": a.change}
+    pairs = []
+    rng = random.SystemRandom()
+    for i in range(1, a.pairs + 1):
+        seed = rng.randrange(4, 1 << 31)
+        order = ["parent", "change"] if i % 2 == 1 else ["change", "parent"]
+        got = {}
+        for side in order:
+            r = run(sides[side], a.workload, seed, a.seconds)
+            got[side] = r
+            if r is not None:
+                vals = " ".join(f"{n}={r['metrics'][n]['value']:.4g}"
+                                for n, _ in metrics if n in r["metrics"])
+                print(f"pair {i} seed {seed} {side}: failed {r['failed']}/"
+                      f"{r['attempted']} {vals}", flush=True)
+        if got["parent"] is not None and got["change"] is not None:
+            pairs.append(got)
+
+    print(f"\n{a.workload}: {len(pairs)} complete pairs of {a.pairs}")
+    print(f"{'metric':<14}{'better':>7}  {'parent q1/med/q3':>26}  "
+          f"{'change q1/med/q3':>26}  {'wins':>5}  {'gap':>9}  {'parent iqr':>10}")
+    for name, better in metrics:
+        both = [p for p in pairs
+                if name in p["parent"]["metrics"] and name in p["change"]["metrics"]]
+        if not both:
+            continue
+        par = [p["parent"]["metrics"][name]["value"] for p in both]
+        chg = [p["change"]["metrics"][name]["value"] for p in both]
+        sign = 1 if better == "higher" else -1
+        wins = sum(1 for x, y in zip(par, chg) if sign * (y - x) > 0)
+        pq, cq = quartiles(par), quartiles(chg)
+        fmt = lambda q: "/".join(f"{v:.4g}" for v in q)
+        print(f"{name:<14}{better:>7}  {fmt(pq):>26}  {fmt(cq):>26}  "
+              f"{wins:>2}/{len(both):<2}  {cq[1] - pq[1]:>+9.4g}  {pq[2] - pq[0]:>10.4g}")
+    for side in ("parent", "change"):
+        failed = sum(p[side]["failed"] for p in pairs)
+        attempted = sum(p[side]["attempted"] for p in pairs)
+        print(f"{side}: {failed} of {attempted} ops failed")
+
+
+if __name__ == "__main__":
+    main()
