@@ -83,12 +83,6 @@ object Bench {
     // (2.58 s vs 2.49 s total). At 100 TB the threshold + AQE decide
     // per stats.
     "spark.sql.autoBroadcastJoinThreshold" -> "10485760",
-    // Static conf, effective because this is the JVM's first session:
-    // the suite's ~20 queries × several codegen units per query exceed
-    // the 100-entry default Janino class cache, so fresh per-run counts
-    // would re-COMPILE evicted units (tens of ms each) instead of
-    // hitting the cache. Sized to hold the whole suite with headroom.
-    "spark.sql.codegen.cache.maxEntries" -> "4096",
     // The cache-priming count() in `main` is a bare scan, which the
     // planner's DisableUnnecessaryBucketedScan would read UNbucketed —
     // baking a partition-less plan into the InMemoryRelation and
@@ -110,21 +104,29 @@ object Bench {
     s"[floor] job_best_ms=${ms(jb)} job_med_ms=${ms(jm)} " +
       s"sql_best_ms=${ms(sb)} sql_med_ms=${ms(sm)}"
 
-  /** The one machine-parsed stdout JSON line. "floor" and "cpus" are
-    * ADDITIVE: the other fields keep their meaning; carrying the same-boot
-    * floor sample INSIDE the archived JSON makes the code-vs-boot split of
-    * any total a one-lookup check instead of a cross-file hunt, and
-    * "cpus" (the session's default parallelism) keeps totals taken at
-    * different core counts from being compared as like with like. Query
-    * times use Double.toString, which is locale-independent. */
+  /** Janino compilations so far in this JVM: one per codegen cache miss. */
+  def compileCount(): Long =
+    org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME
+      .getCount
+
+  /** The one machine-parsed stdout JSON line. "floor", "cpus" and
+    * "compiles" are ADDITIVE: the other fields keep their meaning; carrying
+    * the same-boot floor sample INSIDE the archived JSON makes the
+    * code-vs-boot split of any total a one-lookup check instead of a
+    * cross-file hunt, "cpus" (the session's default parallelism) keeps
+    * totals taken at different core counts from being compared as like
+    * with like, and "compiles" (Janino compilations during the timed loop)
+    * shows when a total pays for codegen cache misses. Query times use
+    * Double.toString, which is locale-independent. */
   def jsonLine(results: Seq[(String, Double)], jb: Double, jm: Double,
-      sb: Double, sm: Double, sfDir: String, cpus: Int): String = {
+      sb: Double, sm: Double, sfDir: String, cpus: Int,
+      compiles: Long): String = {
     val qs = results.map { case (k, v) => "\"" + k + "\":" + v }
       .mkString("{", ",", "}")
     val total = results.map(_._2).filter(_ >= 0).sum
     val floorJson = s"""{"job_best_ms":${ms(jb)},"job_med_ms":${ms(jm)},""" +
       s""""sql_best_ms":${ms(sb)},"sql_med_ms":${ms(sm)}}"""
-    s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"floor":$floorJson,"sf":"$sfDir","cpus":$cpus}"""
+    s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"floor":$floorJson,"sf":"$sfDir","cpus":$cpus,"compiles":$compiles}"""
   }
 
   def main(args: Array[String]): Unit = {
@@ -165,6 +167,7 @@ object Bench {
     // the driver never sets it, so the recorded suite stays the full 20.
     val only = sys.env.get("SPARK_GRAFT_BENCH_ONLY")
       .map(_.split(",").toSet).getOrElse(headline.toSet)
+    val compiles0 = compileCount()
     val results = headline.filter(only)
       .filter(SparkEntry.queries.contains).map { name =>
       try {
@@ -203,6 +206,7 @@ object Bench {
         name -> (1 to 3).map(_ => timeOnce()).min
       } catch { case _: Throwable => name -> -1.0 }
     }
+    val compiles = compileCount() - compiles0
     // Same-boot floor sample (round-17, VERDICT r16 item 5): two
     // fixed-work probes timed AFTER the suite (JIT warm), printed just
     // above the JSON line so every archived BENCH_r{N}.json tail carries
@@ -227,7 +231,7 @@ object Bench {
     }
     println(floorLine(jb, jm, sb, sm))
     println(jsonLine(results, jb, jm, sb, sm, sfDir,
-      spark.sparkContext.defaultParallelism))
+      spark.sparkContext.defaultParallelism, compiles))
     System.out.flush()
     spark.stop()
   }

@@ -22,6 +22,21 @@ object GraftSession {
     builder(s"local[$cpus]", shufflePartitions)
       .config("spark.ui.enabled", "false")
 
+  /** The engine's session: GraftExtensions plus the baseline configs.
+    *
+    * It sizes Spark's class cache for generated code
+    * (`spark.sql.codegen.cache.maxEntries`, a static conf Spark reads once
+    * per JVM, at the first code generation) at 4096 entries, not Spark's
+    * 100. The 20 headline keys, collected once and counted, compile about
+    * 340 classes at local[2] on sf0.1 (`CodegenMetrics`), so at 100
+    * entries every later count pass evicted and recompiled about 144 of
+    * them, and a key's latency depended on whether its classes had
+    * survived since it last ran. At 4096, over ten times that working set,
+    * a second pass compiles none (CodegenCacheSpec). It is a
+    * constant, not a knob: the working set is a property of the engine's
+    * plans, and with `HoistFilterLiterals` keeping per-batch constants
+    * out of the source a long migration adds no classes per batch, so a
+    * larger cache holds no dead ones. */
   def builder(master: String = "local[*]",
       shufflePartitions: Int = Runtime.getRuntime.availableProcessors)
       : SparkSession.Builder =
@@ -30,6 +45,7 @@ object GraftSession {
       .withExtensions(graft.plans.GraftExtensions)
       .config("spark.sql.shuffle.partitions", shufflePartitions)
       .config("spark.sql.session.timeZone", "UTC")
+      .config("spark.sql.codegen.cache.maxEntries", "4096")
       // CBO on from session start (round-8: was a CboOps registration-time
       // side effect, which made plan behavior order-dependent). Costing
       // only activates on relations WITH catalog stats — i.e. the

@@ -24,6 +24,11 @@ object GraftExtensions extends (SparkSessionExtensions => Unit) {
     // driver-held rows run zero jobs (see plans/LocalDim.scala).
     ext.injectPlannerStrategy(_ =>
       org.apache.spark.sql.execution.graft.LocalDimStrategy)
+    // Filter comparison constants read from `references`, so one plan
+    // shape compiles once whatever its bounds (plans/HoistFilterLiterals).
+    ext.injectColumnar(_ => new org.apache.spark.sql.execution.ColumnarRule {
+      override def preColumnarTransitions = HoistFilterLiterals
+    })
     ext.injectFunction((
       org.apache.spark.sql.catalyst.FunctionIdentifier("cosine_sim"),
       graft.functions.CosineSimilarity.info,

@@ -63,7 +63,7 @@ class SessionSpec extends SparkSpec {
         "[floor] job_best_ms=1.2 job_med_ms=2.5 sql_best_ms=10.0 sql_med_ms=12.0")
       val line = Bench.jsonLine(Seq("q1_pricing_summary" -> 0.25,
         "anti_join" -> -1.0, "set_ops" -> 0.5), 1.23, 2.5, 10.04, 12.0,
-        "/data/sf0.1", cpus = 4)
+        "/data/sf0.1", cpus = 4, compiles = 12)
       val json = new com.fasterxml.jackson.databind.ObjectMapper()
         .readTree(line)
       assert(json.get("metric").asText == "total")
@@ -74,6 +74,7 @@ class SessionSpec extends SparkSpec {
         .map(k => f.get(k).asDouble) == Seq(1.2, 2.5, 10.0, 12.0))
       assert(json.get("sf").asText == "/data/sf0.1")
       assert(json.get("cpus").asInt == 4)
+      assert(json.get("compiles").asLong == 12L)
     } finally Locale.setDefault(saved)
   }
 
