@@ -141,11 +141,7 @@ object Bench {
     // scans, forfeiting the co-located join plans the engine documents.
     // ~2 s pay-once at sf0.1; skipped when the copies are already fresh.
     try {
-      if (sys.env.getOrElse("SPARK_GRAFT_BUCKETED", "true") != "false" &&
-          Tables.bucketKeys.keys.exists(n =>
-            !Tables.load(spark, sfDir, n).queryExecution.analyzed.toString
-              .contains("graft_b_")))
-        Tables.materializeBuckets(spark, sfDir)
+      if (Tables.bucketsStale(sfDir)) Tables.materializeBuckets(spark, sfDir)
     } catch { case e: Throwable =>
       System.err.println(s"[bench] bucketed layout prep skipped: ${e.getMessage}")
     }

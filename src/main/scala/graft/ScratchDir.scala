@@ -6,7 +6,8 @@ import java.nio.file.{Files, Path}
   * an index on disk and returns a lazy frame over it cannot delete the
   * directory itself (the frame reads it later), so every such directory
   * is registered here and one shutdown hook deletes them all,
-  * recursively. */
+  * recursively, each with the layout copies keyed on it
+  * ([[Tables.layoutRoot]]), which a scratch corpus may have. */
 object ScratchDir {
   private val dirs = java.util.concurrent.ConcurrentHashMap.newKeySet[Path]()
 
@@ -18,6 +19,7 @@ object ScratchDir {
     hook
     val dir = Files.createTempDirectory(prefix)
     dirs.add(dir)
+    dirs.add(java.nio.file.Paths.get(Tables.layoutRoot(dir.toString)))
     dir.toString
   }
 

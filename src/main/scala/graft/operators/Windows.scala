@@ -44,8 +44,12 @@ object Windows {
     // share one oracle and are output-identical (o_orderkey is unique per
     // group), so this is a plan choice, not a semantic fork; at normal
     // budgets (every verify/bench tier) the gate says no and the executed
-    // plan is byte-stable.
-    if (graft.MemBudget.rerouteTopN(s)) aggPlan(s, dir)
+    // plan is byte-stable. The window arm reads o_orderkey and o_totalprice
+    // from files, which Spark types nullable, while the aggregate's fields
+    // are non-null: the reroute widens them, so both arms write one schema.
+    if (graft.MemBudget.rerouteTopN(s))
+      Seq("o_orderkey", "o_totalprice").foldLeft(aggPlan(s, dir))((df, c) =>
+        df.withColumn(c, org.apache.spark.sql.GraftSqlBridge.nullable(col(c))))
     else t(s, dir, "orders")
       .join(custArm(s, dir, "ranktopn").map(broadcast)
         .getOrElse(t(s, dir, "customer").select("c_custkey")),

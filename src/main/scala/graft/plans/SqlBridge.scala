@@ -13,6 +13,11 @@ object GraftSqlBridge {
   def ofRows(session: SparkSession, plan: LogicalPlan): DataFrame =
     classic.Dataset.ofRows(session.asInstanceOf[classic.SparkSession], plan)
 
+  /** `c` typed nullable: a column that no optimizer rule narrows back to
+    * non-null (`ExpressionUtils` is private[sql]). */
+  def nullable(c: Column): Column = classic.ExpressionUtils.column(
+    catalyst.expressions.KnownNullable(classic.ExpressionUtils.expression(c)))
+
   /** The analyzed logical plan of a DataFrame (no optimization pass). */
   def analyzed(df: DataFrame): LogicalPlan =
     df.asInstanceOf[classic.Dataset[Row]].queryExecution.analyzed

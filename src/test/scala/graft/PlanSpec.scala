@@ -260,6 +260,8 @@ class PlanSpec extends SparkSpec {
         "normal budget must keep the declared window plan:\n" + pn.take(800))
       assert(normal.collect().toSeq == cappedRows,
         "both plans must return identical rows")
+      assert(normal.schema == capped.schema,
+        s"both plans must write one schema:\n${normal.schema}\n${capped.schema}")
     } finally conf.unset("spark.graft.test.memPerCoreBytes")
   }
 
